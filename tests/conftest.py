@@ -104,6 +104,18 @@ def build_tiny(spark, seed: int = 42):
     return db, cube, rows
 
 
+@pytest.fixture(params=["copy", "spark"])
+def read_tier(request, monkeypatch):
+    """Run a Cube-API test twice: cell reads answered by the driver copy
+    of the fact (``tinyolap_spark.local``), and forced onto the Spark
+    engine tiers (grouping sets, conditional aggregation, request join)."""
+    if request.param == "spark":
+        from tinyolap_spark import local
+
+        monkeypatch.setattr(local, "CELL_LIMIT", 0)
+    return request.param
+
+
 @pytest.fixture(scope="session")
 def tiny(spark):
     return build_tiny(spark)

@@ -128,10 +128,11 @@ def test_big_cube_total_count(spark):
 
 
 @pytest.mark.parametrize("seed", [5, 21])
-def test_random_small_batches_hit_fast_paths(spark, seed):
+def test_random_small_batches_hit_fast_paths(spark, seed, read_tier):
     """Batches small enough for the grouping-sets / conditional-agg fast
     paths (engine.aggregate_cells) must match the dict oracle exactly —
-    including weighted ancestors, leaf drills and missing cells."""
+    including weighted ancestors, leaf drills and missing cells — and so
+    must the driver copy that answers them when the fact is small."""
     rng = random.Random(seed)
     db = Database(f"fast{seed}", spark=spark)
     d1, leaves1 = random_dag_dimension(db, "da", rng)
@@ -169,6 +170,7 @@ def test_random_small_batches_hit_fast_paths(spark, seed):
                 assert g is not None and abs(g - want) < 1e-9 * max(
                     1, abs(want)
                 ), (q, g, want)
+    assert (cube._local is not None) == (read_tier == "copy")
 
 
 @pytest.mark.parametrize("seed", [3, 21, 55])

@@ -178,7 +178,7 @@ def test_driver_and_executor_paths_agree_on_plain_rule(spark):
     assert got_exec == pytest.approx(got_driver)
 
 
-def test_get_many_rule_cells_batched_reads(spark, monkeypatch):
+def test_get_many_rule_cells_batched_reads(spark, monkeypatch, read_tier):
     """Rule-read prefetch: N base-level rule cells in one get_many must
     warm the cache with O(1) base_lookup batches, not O(N x reads) point
     jobs, and still produce correct values."""
@@ -215,6 +215,7 @@ def test_get_many_rule_cells_batched_reads(spark, monkeypatch):
     # probe (<= 2 reads for the first cell) + one batched prefetch —
     # NOT two point reads per cell
     assert calls["n"] <= 3, calls["n"]
+    assert (cube._local is not None) == (read_tier == "copy")
 
 
 def test_get_many_aggregated_rule_cells_one_pass(spark, monkeypatch):

@@ -42,7 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from . import arith, engine
+from . import arith, engine, local
 from .metadata import (
     Dimension,
     InvalidAddressError,
@@ -516,6 +516,11 @@ class Cube:
         self._fact: DataFrame = spark.createDataFrame([], schema=self._schema)
         self._fact_is_persisted = False
         self._pending: dict[tuple[int, ...], Any] = {}
+        # driver copy of a small fact (local.LocalFact, mirrors exactly
+        # self._fact) and, for a fact not copied, (fact, a lower bound of
+        # its cell count) so it is not counted again
+        self._local: Optional[local.LocalFact] = None
+        self._local_over: Optional[tuple[DataFrame, int]] = None
         self.rules = RuleRegistry()
         self.caching = True
         self._cache: dict[tuple[int, ...], Any] = {}
@@ -533,6 +538,9 @@ class Cube:
         self.counter_aggregations = 0
         self.counter_rule_requests = 0
         self.counter_cache_hits = 0
+        # cells answered by the driver copy, and how often it was built
+        self.counter_local_cells = 0
+        self.counter_local_builds = 0
         # aggregate navigation (add_summary): materialized summary tables
         self._summaries: list[dict] = []
         self.counter_summary_hits = 0
@@ -614,9 +622,34 @@ class Cube:
             return merged.localCheckpoint(eager=True), True
         return merged, False
 
-    def _replace_fact(self, df: DataFrame, persist: bool = True) -> None:
+    def _replace_fact(
+        self,
+        df: DataFrame,
+        persist: bool = True,
+        written: "Optional[Sequence[tuple]]" = None,
+    ) -> None:
+        """Every fact swap goes through here (writes, loads, area ops,
+        ``clear``, undo/redo, save/open): it clears the cell cache,
+        stale-marks the summaries and moves the driver copy along.
+        ``written``: the ``(*ids, value, value_str)`` rows a successful
+        merge applied on top of the outgoing fact — the copy is patched
+        with them; any other swap drops it (the next read rebuilds)."""
         old = self._fact
+        lf, over = self._local, self._local_over
+        self._local_over = None
+        if written is not None and lf is not None and lf.fact is old:
+            lf = lf.patched(df, written)
+            if lf is not None and len(lf.codes) > local.CELL_LIMIT:
+                lf, self._local_over = None, (df, len(lf.codes))
+        else:
+            lf = None
+            if written is not None and over is not None and over[0] is old:
+                # still over the limit: a merge drops at most one stored
+                # row per written row
+                if over[1] - len(written) > local.CELL_LIMIT:
+                    self._local_over = (df, over[1] - len(written))
         self._fact = df
+        self._local = lf
         if persist:
             self._fact.persist()
             self._fact_is_persisted = True
@@ -638,6 +671,37 @@ class Cube:
                 except Exception:
                     pass
                 s["df"] = None
+
+    def _local_copy(self) -> "Optional[local.LocalFact]":
+        """The driver copy of the (flushed) fact, built on first use, or
+        ``None`` when this cube's cell reads stay on Spark: a fact of
+        more than ``local.CELL_LIMIT`` cells (never collected), a
+        ``large_dim`` dimension, or registered summaries (aggregate
+        navigation routes their rollups)."""
+        if self._summaries:
+            return None
+        fact = self._fact
+        lf = self._local
+        if lf is not None and lf.fact is fact:
+            return lf
+        over = self._local_over
+        if (over is not None and over[0] is fact) or not local.eligible(
+            self.dimensions
+        ):
+            return None
+        cells = fact.count()
+        lf = (
+            local.LocalFact.build(fact, self._cols, self.dimensions)
+            if cells <= local.CELL_LIMIT
+            else None
+        )
+        if lf is None:
+            self._local_over = (fact, cells)
+            return None
+        self.counter_local_builds += 1
+        if self._fact is fact:  # a concurrent write may have swapped it
+            self._local = lf
+        return lf
 
     # ---------------------------------------------- aggregate navigation
     def add_summary(self, keep_dims: "Sequence") -> None:
@@ -893,19 +957,7 @@ class Cube:
         if requested is None:
             return self.fact
         dim_by_col = dict(self._dims_spec())
-        # workload log (even with no summaries yet — that's what the
-        # advisor mines): the MINIMAL keep-set that could answer this
-        # request = dims requested below their trivial tops
-        sig = frozenset(
-            c
-            for c, ids in requested.items()
-            if ids is not None
-            and not set(int(i) for i in ids)
-            <= dim_by_col[c]._trivial_tops
-        )
-        if not hasattr(self, "_request_sigs"):
-            self._request_sigs = Counter()
-        self._request_sigs[sig] += 1
+        self._log_request(requested)
         summaries = getattr(self, "_summaries", None)
         if not summaries:
             return self.fact
@@ -939,14 +991,24 @@ class Cube:
         ) + 1
         return self._summary_df(best)
 
-    def _rollup_fact_for_addresses(
-        self, addresses: "dict[int, Sequence[int]]"
-    ) -> DataFrame:
-        req = {
-            c: sorted({int(a[i]) for a in addresses.values()})
-            for i, c in enumerate(self._cols)
-        }
-        return self._rollup_fact(req)
+    def _log_request(
+        self, requested: "dict[str, Sequence[int] | None]"
+    ) -> None:
+        """Workload log for ``suggest_summaries`` (kept even with no
+        summaries yet — that's what the advisor mines): the MINIMAL
+        keep-set that could answer this request = dims requested below
+        their trivial tops."""
+        dim_by_col = dict(self._dims_spec())
+        sig = frozenset(
+            c
+            for c, ids in requested.items()
+            if ids is not None
+            and not set(int(i) for i in ids)
+            <= dim_by_col[c]._trivial_tops
+        )
+        if not hasattr(self, "_request_sigs"):
+            self._request_sigs = Counter()
+        self._request_sigs[sig] += 1
 
     def _invalidate(self) -> None:
         self._cache.clear()
@@ -971,8 +1033,9 @@ class Cube:
         )
         merged = keep.unionByName(inserts)
         # cut lineage so thousands of interactive writes don't stack plans
+        merged = merged.localCheckpoint(eager=True)
         self._fact_folds = 0  # fact is flat again: restart the fold count
-        self._replace_fact(merged.localCheckpoint(eager=True), persist=False)
+        self._replace_fact(merged, persist=False, written=rows)
 
     # -------------------------------------------------------------- writes
     def set(self, address: Sequence, value: Any) -> None:
@@ -1096,7 +1159,7 @@ class Cube:
             F.col("value").isNotNull() | F.col("value_str").isNotNull()
         )
         merged, ckpt = self._maybe_compact_fact(keep.unionByName(inserts))
-        self._replace_fact(merged, persist=not ckpt)
+        self._replace_fact(merged, persist=not ckpt, written=resolved)
 
     def load_dataframe(
         self,
@@ -1236,10 +1299,51 @@ class Cube:
         return self.get(address)
 
     def get_many(self, addresses: Sequence[Sequence]) -> list[Any]:
-        """Answer N point reads in <= 2 Spark jobs (+ rule evaluation)."""
+        """Answer N point reads in one batch.  Base and aggregated cells
+        come from the driver copy of a small fact (no Spark job), else
+        from at most two Spark jobs (one base-cell join, one rollup).
+        Rule cells add their own evaluation, which may run more jobs."""
         idxs = [self._resolve_address(a)[0] for a in addresses]
         self._prefetch(idxs)
         return [self._get_idx(i) for i in idxs]
+
+    def _base_values(
+        self, addresses: "dict[int, tuple[int, ...]]"
+    ) -> "dict[int, Any]":
+        """Stored base cells by request id: from the driver copy when the
+        fact has one, else one Spark join (``engine.base_lookup``)."""
+        self._flush()
+        lf = self._local_copy()
+        if lf is None:
+            return engine.base_lookup(
+                self._fact, self.spark, self._cols, addresses
+            )
+        self.counter_local_cells += len(addresses)
+        return lf.base(addresses)
+
+    def _aggregate_values(
+        self, addresses: "dict[int, tuple[int, ...]]"
+    ) -> "dict[int, Optional[float]]":
+        """Rolled-up cells by request id: from the driver copy when the
+        fact has one, else one Spark rollup (``engine.aggregate_cells``)
+        over the fact or the summary that navigation picks."""
+        self._flush()
+        self.counter_aggregations += len(addresses)
+        requested = {
+            c: sorted({int(a[i]) for a in addresses.values()})
+            for i, c in enumerate(self._cols)
+        }
+        lf = self._local_copy()
+        if lf is None:
+            return engine.aggregate_cells(
+                self._rollup_fact(requested),
+                self.spark,
+                self._dims_spec(),
+                addresses,
+            )
+        self._log_request(requested)
+        self.counter_local_cells += len(addresses)
+        return lf.aggregate(self.dimensions, addresses)
 
     def _prefetch(self, idx_addresses: Sequence[tuple[int, ...]]) -> None:
         """Batch-compute values for addresses not in cache / not rule-covered."""
@@ -1257,22 +1361,13 @@ class Cube:
                 base[i] = addr
             else:
                 aggs[i] = addr
-        if base:
-            vals = engine.base_lookup(
-                self._fact, self.spark, self._cols, base
-            )
-            for i, addr in base.items():
-                self._cache[addr] = vals[i]
-        if aggs:
-            self.counter_aggregations += len(aggs)
-            vals2 = engine.aggregate_cells(
-                self._rollup_fact_for_addresses(aggs),
-                self.spark,
-                self._dims_spec(),
-                aggs,
-            )
-            for i, addr in aggs.items():
-                self._cache[addr] = vals2[i]
+        for batch, read in (
+            (base, self._base_values), (aggs, self._aggregate_values)
+        ):
+            if batch:
+                vals = read(batch)
+                for i, addr in batch.items():
+                    self._cache[addr] = vals[i]
         if self.caching:
             self._prefetch_agg_rule_cells(idx_addresses)
         self._prefetch_rule_reads(idx_addresses)
@@ -1373,9 +1468,7 @@ class Cube:
                         want[len(want)] = rat
             if not want:
                 continue
-            vals = engine.base_lookup(
-                self._fact, self.spark, self._cols, want
-            )
+            vals = self._base_values(want)
             for i, rat in want.items():
                 self._cache[rat] = vals[i]
 
@@ -1452,11 +1545,7 @@ class Cube:
         if use_cache and self.caching and idx_address in self._cache:
             self.counter_cache_hits += 1
             return self._cache[idx_address]
-        self._flush()
-        vals = engine.base_lookup(
-            self._fact, self.spark, self._cols, {0: idx_address}
-        )
-        v = vals[0]
+        v = self._base_values({0: idx_address})[0]
         if use_cache and self.caching:
             self._cache[idx_address] = v
         return v
@@ -1467,15 +1556,7 @@ class Cube:
         if use_cache and self.caching and idx_address in self._cache:
             self.counter_cache_hits += 1
             return self._cache[idx_address]
-        self._flush()
-        self.counter_aggregations += 1
-        vals = engine.aggregate_cells(
-            self._rollup_fact_for_addresses({0: idx_address}),
-            self.spark,
-            self._dims_spec(),
-            {0: idx_address},
-        )
-        v = vals[0]
+        v = self._aggregate_values({0: idx_address})[0]
         if use_cache and self.caching:
             self._cache[idx_address] = v
         return v
@@ -2271,6 +2352,8 @@ class Cube:
         self.counter_cell_requests = 0
         self.counter_aggregations = 0
         self.counter_rule_requests = 0
+        self.counter_local_cells = 0
+        self.counter_local_builds = 0
 
     def validate_rules(self) -> tuple[bool, str]:
         """Call every function rule once with a sample cell matching its

@@ -442,7 +442,7 @@ class Database:
             # overwrite a path it is reading from (open -> modify -> save
             # to the same path is the reference's routine workflow).
             fact = cube.fact.localCheckpoint(eager=True)
-            cube._replace_fact(fact, persist=False)
+            cube._replace_fact(fact, persist=False, written=())
             out = self._enc_fact(cube, fact, key)
             writer = out.write.mode("overwrite")
             pcol = (partition_by or {}).get(cube.name.lower())

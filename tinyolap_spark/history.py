@@ -61,9 +61,8 @@ class History:
                 break
             cube, fact, pending = self._undo.pop()
             self._redo.append((cube, cube._fact, dict(cube._pending)))
-            cube._fact = fact
             cube._pending = pending
-            cube._invalidate()
+            cube._replace_fact(fact, persist=False)
             done += 1
         return done
 
@@ -74,9 +73,8 @@ class History:
                 break
             cube, fact, pending = self._redo.pop()
             self._undo.append((cube, cube._fact, dict(cube._pending)))
-            cube._fact = fact
             cube._pending = pending
-            cube._invalidate()
+            cube._replace_fact(fact, persist=False)
             done += 1
         return done
 
