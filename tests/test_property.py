@@ -177,8 +177,9 @@ def test_random_small_batches_hit_fast_paths(spark, seed, read_tier):
 def test_random_rules_executor_driver_agree(spark, seed):
     """Randomized differential check of the two BASE_LEVEL rule tiers:
     random measures DAG + random single-dimension rule bodies (leaf and
-    aggregated reads) must produce identical aggregates from the executor
-    path and the driver loop."""
+    aggregated reads) must produce identical aggregates from the
+    distributed tier — per address and as one get_many batch — and the
+    driver loop."""
     from tinyolap_spark import RuleScope
 
     rng = random.Random(seed)
@@ -219,6 +220,20 @@ def test_random_rules_executor_driver_agree(spark, seed):
         cube._cache.clear()
         got = cube[member.name, "derived"]
         path = cube._last_base_rule_path
+        cube._cache.clear()
+        want = cube._base_rule_driver_loop(
+            rdef, [member.index, dm.member(read_a).index]
+        )
+        if got is None or want is None:
+            assert got == want, (member.name, path)
+        else:
+            assert got == pytest.approx(want), (member.name, path)
+    # the same targets as ONE batch: one distributed pass over every
+    # requested ancestor (aggregated reads of mtot included)
+    cube._cache.clear()
+    got_all = cube.get_many([(m.name, "derived") for m in targets])
+    path = cube._last_base_rule_path
+    for member, got in zip(targets, got_all):
         cube._cache.clear()
         want = cube._base_rule_driver_loop(
             rdef, [member.index, dm.member(read_a).index]

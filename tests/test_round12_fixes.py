@@ -71,10 +71,10 @@ def test_large_dim_aggregated_get_leaves_closure_deferred(spark):
 
 
 def test_large_dim_rule_query_leaves_closure_deferred(spark):
-    """The rule-interference checks (cube.py `_aggregate_base_rule_many`
-    / `_base_rule_distributed`) scanned ``closure_rows`` per nested-rule
-    pattern member; with >=2 registered rules an aggregated read over a
-    large_dim cube paid the deferred walk.  ``is_under`` walks one
+    """The rule-interference check (cube.py `_aggregate_base_rule_many`)
+    scanned ``closure_rows`` per nested-rule pattern member; with >=2
+    registered rules an aggregated read over a large_dim cube paid the
+    deferred walk.  ``is_under`` walks one
     member's ancestors instead."""
     db = Database("r12probe_rules", spark=spark)
     d = db.add_dimension("keys", large_dim=True).edit()

@@ -293,14 +293,13 @@ def _union_count(df):
 
 
 def test_summary_fold_auto_compacts(spark):
-    """Additive folds flatten the summary lineage every Nth fold by
-    DEFAULT — an unattended streaming ingest has a bounded plan depth
-    without anyone calling compact_summaries()."""
+    """Additive folds flatten the summary lineage on EVERY fold — an
+    unattended streaming ingest has a bounded plan depth without anyone
+    calling compact_summaries()."""
     from conftest import build_tiny
 
     _, cube, _ = build_tiny(spark, seed=23)
     try:
-        cube.SUMMARY_AUTO_COMPACT_EVERY = 4
         cube.add_summary(["years", "months", "measures"])
         addr = ("All years", "Year", "Total", "Total", "Sales")
         base = cube.get_many([addr])[0]
@@ -320,14 +319,10 @@ def test_summary_fold_auto_compacts(spark):
         for _ in range(10):
             cube.load_dataframe(batch, additive=True)
             depths.append(_union_count(cube._summaries[0]["df"]))
-        # two reset cycles inside 10 folds at threshold 4: every Nth fold
-        # flattens to zero unions, and the growth between resets is
-        # cycle-stable (fold 9's depth == fold 5's — nothing carries
-        # across a compaction), i.e. plan depth is BOUNDED over any
-        # number of folds
-        assert depths[3] == 0 and depths[7] == 0, depths
-        assert depths[8] == depths[4], depths
-        assert max(depths[4:8]) == max(depths[8:] + depths[4:8]), depths
+        # every fold leaves a flat summary: zero unions after each of
+        # the 10 folds, i.e. plan depth is BOUNDED over any number of
+        # folds
+        assert depths == [0] * 10, depths
         cube._cache.clear()
         assert cube.get_many([addr])[0] == pytest.approx(base + 30.0)
     finally:

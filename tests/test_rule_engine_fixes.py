@@ -12,12 +12,14 @@ executor-tier widening to aggregated feeder members (VERDICT r3 #5/#8).
   probe never saw) return correct rolled-up values, not None.
 """
 
+import time
+
 import pytest
 
 from tinyolap_spark import Database, RuleScope
 
 
-def _regions_measures(spark, name):
+def _regions_measures(spark, name, extra_measures=()):
     db = Database(name, spark=spark)
     regions = db.add_dimension("regions").edit()
     regions.add_many("NS", ["North", "South"])
@@ -28,6 +30,8 @@ def _regions_measures(spark, name):
     measures.add_many("S2")
     measures.add_many("SalesTotal", ["S1", "S2"])
     measures.add_many("Derived")
+    for m in extra_measures:
+        measures.add_many(m)
     measures.commit()
     cube = db.add_cube("c", [regions, measures])
     cube.write_rows([
@@ -220,9 +224,9 @@ def test_get_many_rule_cells_batched_reads(spark, monkeypatch, read_tier):
 
 def test_get_many_aggregated_rule_cells_one_pass(spark, monkeypatch):
     """N aggregated addresses dispatched to the same BASE_LEVEL rule must
-    evaluate in ONE batched distributed pass (cache-served afterwards),
-    not one _base_rule_distributed job per address — and values must match
-    the per-address path."""
+    evaluate in ONE batched distributed pass (cache-served afterwards):
+    one `_aggregate_base_rule_many` call, no driver loop — and values must
+    match the per-address path."""
     db, cube = _regions_measures(spark, "batch_agg_rules")
 
     def derived(c):
@@ -239,18 +243,127 @@ def test_get_many_aggregated_rule_cells_one_pass(spark, monkeypatch):
         cube._cache.clear()
         expected.append(cube[t])
 
-    calls = {"n": 0}
-    orig = cube._base_rule_distributed
+    calls = {"many": 0, "driver": 0}
+    orig_many = cube._aggregate_base_rule_many
+    orig_driver = cube._base_rule_driver_loop
 
-    def counting(rdef, query_addr):
-        calls["n"] += 1
-        return orig(rdef, query_addr)
+    def counting_many(rdef, idx_addresses):
+        calls["many"] += 1
+        return orig_many(rdef, idx_addresses)
 
-    monkeypatch.setattr(cube, "_base_rule_distributed", counting)
+    def counting_driver(rdef, query_addr):
+        calls["driver"] += 1
+        return orig_driver(rdef, query_addr)
+
+    monkeypatch.setattr(cube, "_aggregate_base_rule_many", counting_many)
+    monkeypatch.setattr(cube, "_base_rule_driver_loop", counting_driver)
     cube._cache.clear()
     got = cube.get_many(targets)
     assert got == [pytest.approx(e) for e in expected]
-    assert calls["n"] == 0, "batch must not fall back to per-address jobs"
+    assert calls == {"many": 1, "driver": 0}, calls
+
+
+def _count_jobs(spark, group, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted by job group.  The
+    status tracker is fed asynchronously, so a one-task barrier job in a
+    second group is awaited first: once it has finished, every event of
+    ``fn`` is in."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    barrier = f"{group}-barrier"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        sc.setJobGroup(barrier, barrier)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30.0
+    while True:
+        infos = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(barrier)]
+        if infos and all(i is not None and i.status == "SUCCEEDED" for i in infos):
+            break
+        assert time.monotonic() < deadline, "status tracker did not catch up"
+        time.sleep(0.01)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+def test_get_many_aggregated_feeder_rule_one_job(spark):
+    """A get_many over several aggregated addresses of an aggregated-feeder
+    rule (closure-expanded read dimension) runs ONE rule evaluation: no
+    more Spark jobs than a single address costs, not one evaluation per
+    address."""
+    db = Database("agg_feeder_batch", spark=spark)
+    regions = db.add_dimension("regions").edit()
+    regions.add_many("NS", ["North", "South"])
+    regions.add_many("WE", ["West", "East"])
+    regions.add_many("Total", ["NS", "WE"])
+    regions.commit()
+    measures = db.add_dimension("measures").edit()
+    measures.add_many("S1")
+    measures.add_many("S2")
+    measures.add_many("SalesTotal", ["S1", "S2"])
+    measures.add_many("Derived")
+    measures.commit()
+    cube = db.add_cube("c", [regions, measures])
+    cube.write_rows([
+        ("North", "S1", 10.0), ("North", "S2", 5.0),
+        ("South", "S1", 20.0), ("South", "S2", 1.0),
+        ("West", "S1", 100.0), ("East", "S2", 7.0),
+    ])
+
+    def derived(c):
+        return c["SalesTotal"] * 0.1
+
+    cube.register_rule(
+        derived, trigger=["measures:Derived"], scope=RuleScope.BASE_LEVEL,
+        feeder=["measures:SalesTotal"],
+    )
+    assert cube["North", "S1"] == 10.0  # the cell copy is built outside the count
+    targets = [("NS", "Derived"), ("WE", "Derived"), ("Total", "Derived")]
+    cube._cache.clear()
+    one, single_jobs = _count_jobs(
+        spark, "rule-single", lambda: cube["NS", "Derived"]
+    )
+    assert one == pytest.approx(3.6)
+    cube._cache.clear()
+    got, batch_jobs = _count_jobs(
+        spark, "rule-batch", lambda: cube.get_many(targets)
+    )
+    assert got == [pytest.approx(3.6), pytest.approx(10.7), pytest.approx(14.3)]
+    assert cube._last_base_rule_path == "compiled"
+    assert 0 < batch_jobs <= single_jobs, (batch_jobs, single_jobs)
+
+
+def test_empty_batch_sets_rule_path(spark):
+    """A batch whose slices hold no base rows is answered by the
+    distributed tier, so it must say so: a stale "driver" from an earlier
+    read would misattribute the result."""
+    import math
+
+    db, cube = _regions_measures(
+        spark, "empty_batch_path", extra_measures=["S3", "LogD"]
+    )
+
+    def xdim(c):
+        return c["S1"] + c["regions:West", "S1"]
+
+    def logd(c):
+        return math.log1p(c["S1"] or 0.0)  # opaque to the arith compiler
+
+    cube.register_rule(
+        xdim, trigger=["measures:Derived"], scope=RuleScope.BASE_LEVEL,
+        feeder=["measures:S1"],
+    )
+    cube.register_rule(
+        logd, trigger=["measures:LogD"], scope=RuleScope.BASE_LEVEL,
+        feeder=["measures:S3"],
+    )
+    assert cube["NS", "Derived"] == pytest.approx(230.0)
+    assert cube._last_base_rule_path == "driver"
+    # S3 holds no rows: both feeder slices are empty
+    assert cube.get_many([("NS", "LogD"), ("Total", "LogD")]) == [None, None]
+    assert cube._last_base_rule_path == "executor"
 
 
 def test_get_many_scattered_addresses_prune_combos(spark):

@@ -30,7 +30,7 @@ from __future__ import annotations
 import inspect
 import itertools
 from collections import Counter
-from typing import Any, Iterable, Optional, Sequence, Union
+from typing import Any, Callable, Iterable, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,9 +59,6 @@ from .rules import (
 )
 
 MAX_DIMS_PER_CUBE = 32  # reference database.py:35-37
-
-_FALLBACK = object()  # sentinel: distributed rule path declined
-
 
 class _NonLocalRead(Exception):
     """A slice-local rule cell was asked for data outside its slice."""
@@ -482,12 +479,6 @@ class Cube:
         self.description = description
         self.spark = spark
         self.dimensions: list[Dimension] = list(dimensions)
-        #: retained for API compatibility (r8 surface); since r9 every
-        #: additive fold flattens the summary lineage eagerly — see the
-        #: load_dataframe fold block for why Nth-fold compaction could
-        #: not bound plan-STRING growth (AQE InMemoryRelation nesting
-        #: doubles explainString per fold)
-        self.SUMMARY_AUTO_COMPACT_EVERY = 64
         #: the FACT accumulates one union+aggregate plan node per
         #: load_dataframe/write_rows merge; every Nth merge the fact is
         #: eagerly localCheckpoint-ed so an unattended micro-batch
@@ -768,9 +759,8 @@ class Cube:
         recompute cliff if persisted blocks are evicted).  This
         localCheckpoints each built frame (eager — summary frames are
         summary-grain small), giving a flat lineage at current contents;
-        results are bit-identical.  Additive loads also auto-compact
-        every ``SUMMARY_AUTO_COMPACT_EVERY`` folds, so calling this is
-        optional hygiene (e.g. before a long quiescent period);
+        results are bit-identical.  Additive loads already flatten each
+        fold, so calling this is optional hygiene;
         ``Database.save``/``open`` rebuild from scratch."""
         for s in getattr(self, "_summaries", []):
             old = s.get("df")
@@ -778,7 +768,6 @@ class Cube:
                 continue
             flat = old.localCheckpoint(eager=True)
             s["df"] = flat
-            s["folds"] = 0
             try:
                 old.unpersist()
             except Exception:
@@ -1057,8 +1046,6 @@ class Cube:
                 "writing to aggregated cells is not supported "
                 f"(address {self._names_for(idx_address)!r})"
             )
-        if isinstance(value, bool):
-            pass  # stored as value_str? reference stores any object; keep float path for bool
         if isinstance(value, int) and not isinstance(value, bool):
             value = float(value)  # reference cube.py:515-516
         if self._history is not None:
@@ -1271,14 +1258,13 @@ class Cube:
                 # grain-bounded small.
                 new = new.localCheckpoint(eager=True)
                 rows = new.count()
-                folded.append((s, new, rows, 0))
+                folded.append((s, new, rows))
             merged, ckpt = self._maybe_compact_fact(merged)
             # stale-marks + unpersists old frames
             self._replace_fact(merged, persist=not ckpt)
-            for s, new, rows, n_folds in folded:
+            for s, new, rows in folded:
                 s["df"] = new
                 s["rows"] = rows
-                s["folds"] = n_folds
         else:
             keep = base.join(df.select(*self._cols), on=self._cols, how="left_anti")
             merged, ckpt = self._maybe_compact_fact(keep.unionByName(df))
@@ -1398,9 +1384,14 @@ class Cube:
             rdefs[id(rdef)] = rdef
             by_rule.setdefault(id(rdef), []).append(addr)
         for key, addrs in by_rule.items():
-            if len(addrs) < 2:
-                continue  # single address: the per-address path is fine
-            res = self._aggregate_base_rule_many(rdefs[key], addrs)
+            rdef = rdefs[key]
+            res = self._aggregate_base_rule_many(rdef, addrs)
+            if res is None and len(addrs) == 1:
+                # declined alone: the driver loop answers now, where the
+                # lazy read would first repeat the same probe
+                res = {addrs[0]: self._base_rule_driver_loop(
+                    rdef, self._rule_query_addr(rdef, addrs[0])
+                )}
             if res is not None:
                 self.counter_aggregations += len(addrs)
                 self._cache.update(res)
@@ -1441,21 +1432,12 @@ class Cube:
         for key, addrs in by_rule.items():
             rdef = rdefs[key]
             pattern = rdef.trigger_idx_pattern or rdef.idx_pattern
-            p = next(iter({pos for pos, _ in pattern}))
+            p = pattern[0][0]
+            read_set = self._rule_read_set(rdef, p, lambda a=addrs[0]: a)
+            if read_set is None:
+                continue  # cross-dim — lazy path handles it
+            _, read_members = read_set
             pdim = self.dimensions[p]
-            plan = arith.compile_rule_plan(self, rdef, p, dict(pattern)[p])
-            if plan is not None:
-                # compiled read set: no Spark probe jobs at all
-                read_members = set(plan.reads)
-            else:
-                probed: list[tuple[int, int]] = []
-                try:
-                    _ProbeCell(self, addrs[0], probed).run(rdef.function)
-                except Exception:  # noqa: BLE001 — probe best-effort
-                    pass
-                if not probed or {pos for pos, _ in probed} - {p}:
-                    continue  # cross-dim or opaque — lazy path handles it
-                read_members = {m for _, m in probed}
             if any(pdim._defs[m].level != 0 for m in read_members):
                 continue  # aggregated reads — lazy path handles it
             want: dict[int, tuple[int, ...]] = {}
@@ -1568,59 +1550,93 @@ class Cube:
         weighted sum of the rule evaluated at every matching *base* cell
         (reference ``cube.py:416-497`` feeder re-addressing).
 
-        The base-cell set comes from the feeder slice when a feeder is
-        declared (rows of ``Quantity`` drive ``Sales``), else from the
-        trigger slice itself.
-
-        Execution is two-tier (SURVEY §2.10/R6): a distributed path
-        evaluates the rule executor-side over the feeder slice and
-        aggregates in Spark — no driver collect of base rows — whenever a
-        one-row probe shows the rule only reads members of a single
-        dimension (the dominant measures-rule shape; aggregated members
-        are served by closure expansion) and no nested rule can fire on
-        any readable slice cell.  Anything else falls back to the driver
-        loop, which can re-enter the full cube.
+        The distributed tier (`_aggregate_base_rule_many`, this address
+        being a batch of one) evaluates the rule in Spark; when it declines,
+        the budgeted driver loop re-enters the full cube.
         """
         if self.caching and idx_address in self._cache:
             self.counter_cache_hits += 1
             return self._cache[idx_address]
-        self._flush()
-        query_addr = list(idx_address)
-        if rdef.feeder:
-            for pos, midx in rdef.feeder_idx_pattern:
-                query_addr[pos] = midx
-        dist = self._base_rule_distributed(rdef, query_addr)
-        if dist is not _FALLBACK:
-            # _base_rule_distributed set _last_base_rule_path
-            # ("compiled" | "executor")
-            if self.caching:
-                self._cache[idx_address] = dist
-            return dist
-        self._last_base_rule_path = "driver"
-        v = self._base_rule_driver_loop(rdef, query_addr)
+        res = self._aggregate_base_rule_many(rdef, [idx_address])
+        if res is not None:
+            v = res[idx_address]
+        else:
+            v = self._base_rule_driver_loop(
+                rdef, self._rule_query_addr(rdef, idx_address)
+            )
         if self.caching:
             self._cache[idx_address] = v
         return v
 
+    @staticmethod
+    def _rule_query_addr(
+        rdef: RuleDef, idx_address: Sequence[int]
+    ) -> list[int]:
+        """The address whose base cells drive a BASE_LEVEL rule: the feeder
+        slice when a feeder is declared (rows of ``Quantity`` drive
+        ``Sales``), else the trigger slice itself."""
+        query_addr = list(idx_address)
+        if rdef.feeder:
+            for pos, midx in rdef.feeder_idx_pattern:
+                query_addr[pos] = midx
+        return query_addr
+
+    def _rule_read_set(
+        self,
+        rdef: RuleDef,
+        p: int,
+        probe_addr: "Callable[[], Optional[tuple[int, ...]]]",
+    ) -> "Optional[tuple[Optional[arith.ArithPlan], Optional[set[int]]]]":
+        """The members of dimension ``p`` a rule reads, as ``(plan,
+        members)``: the arith-compiled plan and its exact read set, else
+        ``(None, members)`` recorded by a dry run of the rule at the base
+        address ``probe_addr()`` returns — ``(None, None)`` when it returns
+        None (no base row to probe).  ``None`` when the probed reads leave
+        dimension ``p``: the rule needs the whole cube."""
+        pattern = rdef.trigger_idx_pattern or rdef.idx_pattern
+        plan = arith.compile_rule_plan(self, rdef, p, dict(pattern)[p])
+        if plan is not None:
+            # no branching on values is possible: no probe job needed
+            return plan, set(plan.reads)
+        addr = probe_addr()
+        if addr is None:
+            return None, None
+        probed: list[tuple[int, int]] = []
+        try:
+            _ProbeCell(self, addr, probed).run(rdef.function)
+        except Exception:  # noqa: BLE001 — probe errors still leave reads recorded
+            pass
+        if {pos for pos, _ in probed} - {p}:
+            return None
+        return None, {m for _, m in probed}
+
     def _aggregate_base_rule_many(
         self, rdef: RuleDef, idx_addresses: "list[tuple[int, ...]]"
     ) -> "Optional[dict[tuple[int, ...], Any]]":
-        """Batched executor evaluation of MANY aggregated addresses sharing
-        one BASE_LEVEL rule — ONE rule-evaluation pass + ONE rollup job,
-        instead of one distributed job per address (the shape a view grid
-        or a get_many batch over rule measures produces).
+        """Distributed evaluation of aggregated addresses sharing one
+        BASE_LEVEL rule — ONE rule-evaluation query for the batch (a view
+        grid, a get_many batch; a single read is a batch of one).  Returns
+        {address: value}, or ``None`` when the rule is ineligible and the
+        caller must use `_base_rule_driver_loop`.  Sets
+        ``_last_base_rule_path`` on every exit ("driver" on a decline).
+
+        Eligible: trigger and feeder sit on one dimension p, the rule reads
+        only members of p (compiled read set, else a one-row probe), and no
+        other rule can fire on a cell the slice holds.
 
         Plan: the fact slice (dim p unfiltered) closure-fans-out the rest
         dims to every requested ancestor (`_joined_rollup` with the UNION
-        of requested ids), groups per (rest-leaf, ancestor-combo) building
-        the per-cell {p-member: value} map, one ``mapInPandas`` pass calls
-        the rule, and a final hash aggregate sums weighted results per
-        ancestor-combo.  Returns {address: value}, or ``None`` when the
-        batch is ineligible (caller falls back to per-address paths).
-        Eligibility mirrors `_base_rule_distributed`'s leaf fast path and
-        is checked against EVERY address's rollup for the nested-rule
-        guard.
+        of requested ids), groups per (rest-leaf, ancestor-combo), evaluates
+        the rule once per group holding a feeder row, and a final hash
+        aggregate sums the weighted results per ancestor-combo.  A compiled
+        rule evaluates as Catalyst expressions over its read members pivoted
+        into columns ("compiled"); any other in one ``mapInPandas`` pass
+        over a per-group {p-member: value} map ("executor").  When a
+        trigger, feeder or read member of p is aggregated, p is expanded
+        through its closure so each group also carries rolled-up values.
         """
+        self._last_base_rule_path = "driver"  # a decline: the loop answers
+        self._flush()
         pattern = rdef.trigger_idx_pattern or rdef.idx_pattern
         positions = {pos for pos, _ in pattern or []}
         if rdef.feeder_idx_pattern:
@@ -1630,38 +1646,15 @@ class Cube:
         p = next(iter(positions))
         pdim = self.dimensions[p]
         trigger_midx = dict(pattern)[p]
-        feeder_midx = (
-            dict(rdef.feeder_idx_pattern)[p]
-            if rdef.feeder_idx_pattern
-            else trigger_midx
-        )
-        if (
-            pdim._defs[trigger_midx].level != 0
-            or pdim._defs[feeder_midx].level != 0
-        ):
-            return None  # aggregated feeder: per-address closure path
-        self._flush()
-        qaddrs = []
-        for addr in idx_addresses:
-            qa = list(addr)
-            if rdef.feeder:
-                for pos, midx in rdef.feeder_idx_pattern:
-                    qa[pos] = midx
-            qaddrs.append(qa)
-        plan = arith.compile_rule_plan(self, rdef, p, trigger_midx)
-        if plan is not None and any(
-            pdim._defs[m].level != 0 for m in plan.reads
-        ):
-            plan = None  # aggregated reads: per-address closure path
-        if plan is not None:
-            read_midxs = set(plan.reads) | {trigger_midx, feeder_midx}
-        if plan is None:
+        feeder_midx = dict(rdef.feeder_idx_pattern or pattern)[p]
+        qaddrs = [self._rule_query_addr(rdef, a) for a in idx_addresses]
+
+        def sample_addr():
             # probe over the UNION of requested addresses: ONE rollup +
             # limit(1) job instead of up-to-N per-address probe jobs
-            # (VERDICT r4 #2 / ADVICE r4: a batch of mostly-empty
-            # aggregated rule addresses paid O(N) driver round-trips).
-            # Any base row under any requested address is a valid probe
-            # point — eligibility only depends on the rule's read set.
+            # (VERDICT r4 #2 / ADVICE r4).  Any base row under any
+            # requested address is a valid probe point — eligibility only
+            # depends on the rule's read set.
             requested_full = {
                 c: sorted({int(qa[i]) for qa in qaddrs})
                 for i, c in enumerate(self._cols)
@@ -1671,23 +1664,30 @@ class Cube:
             )
             sample = sdf.select(*self._cols).limit(1).collect()
             if not sample:
-                return {tuple(a): None for a in idx_addresses}
+                return None
             trigger_idx = [sample[0][c] for c in self._cols]
             for pos, midx in pattern:
                 trigger_idx[pos] = midx
-            probed: list[tuple[int, int]] = []
-            try:
-                _ProbeCell(self, tuple(trigger_idx), probed).run(
-                    rdef.function
-                )
-            except Exception:  # noqa: BLE001
-                pass
-            if not probed or {pos for pos, _ in probed} - {p}:
-                return None  # cross-dim / opaque reads
-            read_midxs = {m for _, m in probed} | {trigger_midx, feeder_midx}
-            if any(pdim._defs[m].level != 0 for m in read_midxs):
-                return None  # aggregated reads: per-address closure path
-        # nested-rule guard over EVERY address's rollup
+            return tuple(trigger_idx)
+
+        read_set = self._rule_read_set(rdef, p, sample_addr)
+        if read_set is None:
+            return None  # reads cross dimensions — needs the cube
+        plan, reads = read_set
+        if reads is None:
+            # empty feeder slices (reference: empty cells)
+            self._last_base_rule_path = "executor"
+            return {tuple(a): None for a in idx_addresses}
+        read_midxs = reads | {trigger_midx, feeder_midx}
+        # Nested rules that could fire on any readable cell -> driver path,
+        # checked against EVERY address's rollup.  A rule patterned on p
+        # itself can always be hit (reads on p are unconstrained at
+        # runtime) — unless the read set is compiled, hence exact, and
+        # misses its member.  A rule patterned on another dimension q fires
+        # on a read cell only if EVERY (q, m) of its pattern names a member
+        # a slice cell can carry: the slice's q-coord is a LEAF under
+        # qa[q], so aggregated members or leaves outside that rollup can
+        # never match (ADVICE r2 medium).
         for other in self.rules:
             if other is rdef:
                 continue
@@ -1702,8 +1702,6 @@ class Cube:
                 for pos, midx in other.idx_pattern or []:
                     if pos == p:
                         if plan is not None and midx not in read_midxs:
-                            # compiled read set is exact — see the
-                            # single-address guard note
                             could_match = False
                             break
                         return None
@@ -1756,27 +1754,53 @@ class Cube:
         for c in rest_cols:
             if f"__w_{c}" in df.columns:
                 wprod = wprod * F.col(f"__w_{c}")
+        keys = [F.col(c) for c in rest_cols + anc_cols]
+        needs_closure = any(
+            pdim._defs[m].level != 0 for m in read_midxs
+        )
+        if needs_closure:
+            # Expand dim p through its closure (broadcast join): each row
+            # also lands on every ancestor of its p-member, weighted, so a
+            # group carries AGGREGATED p-members too — rolled-up values for
+            # aggregated triggers/feeders/reads and for data-dependent
+            # runtime reads the one-row probe never saw (ADVICE r2 medium).
+            # Closure self-rows keep every base member.  Costs one extra
+            # shuffle, so taken only when an aggregated member is in play.
+            pcdf = engine.closure_df(self.spark, pdim).select(
+                F.col("member_id").alias("__m_p"),
+                F.col("ancestor_id").alias("__a_p"),
+                F.col("weight").alias("__w_p"),
+            )
+            df = df.join(
+                engine._closure_side(pcdf, pdim),
+                df[p_col] == F.col("__m_p"),
+                "inner",
+            )
+            op_col, op_val = F.col("__a_p"), F.col("value") * F.col("__w_p")
+        else:
+            op_col, op_val = F.col(p_col), F.col("value")
         if plan is not None:
             # Catalyst tier: conditional aggregates pivot the read members
             # into columns (codegen HashAggregate, map-side partial agg),
             # the verified expression evaluates as native SQL, one hash
             # aggregate re-weights per ancestor combo — the whole batch is
             # ONE fully-JVM job: no collect_list map, no Arrow, no Python.
+            # A leaf operand has exactly one base row per group; a
+            # rolled-up one is a weighted sum.
+            op_agg = F.sum if needs_closure else F.max
             aggs = [
-                F.max(
-                    F.when(F.col(p_col) == int(m), F.col("value"))
-                ).alias(f"__op_{int(m)}")
+                op_agg(F.when(op_col == int(m), op_val)).alias(
+                    f"__op_{int(m)}"
+                )
                 for m in plan.reads
             ]
             aggs.append(
                 F.max(
-                    F.when(F.col(p_col) == int(feeder_midx), F.lit(1))
+                    F.when(op_col == int(feeder_midx), F.lit(1))
                 ).alias("__has_f")
             )
             aggs.append(F.first(wprod).alias("__w"))
-            cgrouped = df.groupBy(
-                *[F.col(c) for c in rest_cols + anc_cols]
-            ).agg(*aggs)
+            cgrouped = df.groupBy(*keys).agg(*aggs)
             vcol, ecol = arith.to_columns(
                 plan, lambda m: F.col(f"__op_{int(m)}")
             )
@@ -1799,17 +1823,35 @@ class Cube:
             return self._rule_rows_to_results(
                 rows, anc_cols, idx_addresses, qaddrs, rest_pos
             )
-        grouped = df.groupBy(
-            *[F.col(c) for c in rest_cols + anc_cols]
-        ).agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col(p_col), F.col("value")))
-            ).alias("__vals"),
-            F.first(wprod).alias("__w"),
-        )
-        p_leaves = frozenset(
-            i for i, d in pdim._defs.items() if d.level == 0
-        )
+        if needs_closure:
+            # two-level map build: roll each p-ancestor up per group, then
+            # collect the rolled values into the group's map
+            rolled = df.groupBy(*keys, op_col).agg(
+                F.sum(op_val).alias("__pval"),
+                F.first(wprod).alias("__w0"),
+            )
+            grouped = rolled.groupBy(*keys).agg(
+                F.map_from_entries(
+                    F.collect_list(F.struct(op_col, F.col("__pval")))
+                ).alias("__vals"),
+                F.first(F.col("__w0")).alias("__w"),
+            )
+            p_leaves = None
+        else:
+            # leaf-only map, ONE shuffle: a runtime read of an aggregated
+            # member raises _NonLocalRead in _SliceCell via p_leaves ->
+            # driver fallback (correct, never silent)
+            grouped = df.groupBy(*keys).agg(
+                F.map_from_entries(
+                    F.collect_list(F.struct(F.col(p_col), F.col("value")))
+                ).alias("__vals"),
+                F.first(wprod).alias("__w"),
+            )
+            p_leaves = frozenset(
+                i for i, d in pdim._defs.items() if d.level == 0
+            )
+        # context shipped to executors: per-dim name->idx resolution and
+        # idx->name maps (small metadata), matching Cell._resolve_modifier
         dim_lookups = [
             ({k: v for k, v in dim._lookup.items()}, dim.name.lower())
             for dim in self.dimensions
@@ -1974,312 +2016,6 @@ class Cube:
             if isinstance(v, float):
                 total += v * row["__w_total"]
         return total
-
-    def _base_rule_distributed(
-        self, rdef: RuleDef, query_addr: list[int]
-    ) -> Any:
-        """Executor-side feeder-rule aggregation, or ``_FALLBACK``.
-
-        Plan: fact rows under the aggregate with the rule's single read
-        dimension p left UNFILTERED → groupBy the leaf rest-address with a
-        JVM-side ``map_from_entries(collect_list(...))`` building the
-        per-cell {member_id: value} map → one ``mapInPandas`` pass calls
-        the rule with a slice-local Cell → Spark sums the weighted results
-        to a scalar.  One shuffle, no fact-sized driver collect.
-        """
-        pattern = rdef.trigger_idx_pattern or rdef.idx_pattern
-        positions = {pos for pos, _ in pattern}
-        if rdef.feeder_idx_pattern:
-            positions |= {pos for pos, _ in rdef.feeder_idx_pattern}
-        if len(positions) != 1:
-            return _FALLBACK
-        p = next(iter(positions))
-        pdim = self.dimensions[p]
-        trigger_midx = dict(pattern)[p]
-        feeder_midx = (
-            dict(rdef.feeder_idx_pattern)[p]
-            if rdef.feeder_idx_pattern
-            else trigger_midx
-        )
-        plan = arith.compile_rule_plan(self, rdef, p, trigger_midx)
-        if plan is not None:
-            # compiled tier: the traced read set is complete (no branching
-            # on values is possible), so no sample-row probe job is needed;
-            # an empty feeder slice falls out of the aggregate (n == 0).
-            read_midxs = set(plan.reads) | {trigger_midx, feeder_midx}
-        else:
-            # probe: one base row under the query address tells us which
-            # dimensions the rule actually touches
-            requested_full = {
-                c: [query_addr[i]] for i, c in enumerate(self._cols)
-            }
-            sample_df, _ = engine._joined_rollup(
-                self._fact, self.spark, self._dims_spec(), requested_full
-            )
-            sample = sample_df.select(*self._cols).limit(1).collect()
-            if not sample:
-                # empty feeder slice (reference: empty cell) — resolved
-                # HERE, so stamp the path: the caller trusts the callee to
-                # set it and a stale "compiled"/"driver" from a previous
-                # query would misattribute this result
-                self._last_base_rule_path = "executor"
-                return None
-            trigger_idx = [sample[0][c] for c in self._cols]
-            for pos, midx in pattern:
-                trigger_idx[pos] = midx
-            probed: list[tuple[int, int]] = []
-            try:
-                _ProbeCell(self, tuple(trigger_idx), probed).run(rdef.function)
-            except Exception:  # noqa: BLE001 — probe errors still leave reads recorded
-                pass
-            read_pos = {pos for pos, _ in probed}
-            if read_pos - {p}:
-                return _FALLBACK  # reads cross dimensions — needs the cube
-            read_midxs = {m for _, m in probed} | {trigger_midx, feeder_midx}
-        # Nested rules that could fire on any readable cell -> driver path.
-        # A rule patterned on p itself can always be hit (reads on p are
-        # unconstrained at runtime).  A rule patterned on another dimension
-        # q fires on a read cell only if EVERY (q, m) of its pattern names
-        # a member a slice cell can carry: for q != p the slice's q-coord
-        # is a LEAF under query_addr[q], so aggregated members or leaves
-        # outside that rollup can never match (ADVICE r2 medium: a nested
-        # rule on a *different* dimension was silently bypassed here).
-        for other in self.rules:
-            if other is rdef:
-                continue
-            if other.scope not in (
-                RuleScope.ALL_LEVELS,
-                RuleScope.BASE_LEVEL,
-                RuleScope.AGGREGATION_LEVEL,
-            ):
-                continue
-            could_match = True
-            for pos, midx in other.idx_pattern or []:
-                if pos == p:
-                    if plan is not None and midx not in read_midxs:
-                        # compiled plans have an EXACT read set (no
-                        # data-dependent reads possible): a rule on dim p
-                        # can only interfere if it triggers on a member
-                        # this rule actually reads
-                        could_match = False
-                        break
-                    return _FALLBACK
-                odim = self.dimensions[pos]
-                if odim._defs[midx].level != 0:
-                    could_match = False  # slice cells sit on leaves of q
-                    break
-                # per-member ancestor walk, NOT closure_rows: a closure
-                # scan re-opens the deferred large_dim driver walk
-                # (VERDICT r11 #1)
-                if not odim.is_under(midx, query_addr[pos]):
-                    could_match = False  # leaf outside the queried rollup
-                    break
-            if could_match:
-                return _FALLBACK
-        p_col = self._cols[p]
-        requested = {
-            c: [query_addr[i]]
-            for i, c in enumerate(self._cols)
-            if c != p_col
-        }
-        df, _ = engine._joined_rollup(
-            self._fact, self.spark, self._dims_spec(), requested
-        )
-        wprod = F.lit(1.0)
-        for c in self._cols:
-            if f"__w_{c}" in df.columns:
-                wprod = wprod * F.col(f"__w_{c}")
-        rest_cols = [c for c in self._cols if c != p_col]
-        needs_closure = any(
-            pdim._defs[m].level != 0 for m in read_midxs
-        )
-        if plan is not None:
-            # Catalyst tier: conditional aggregates pivot the few read
-            # members into columns (plain codegen HashAggregate with
-            # map-side partial aggregation — no collect_list map, no
-            # Arrow, no Python), the verified expression evaluates as
-            # native SQL, and ONE final aggregate re-weights.
-            if needs_closure:
-                pcdf = engine.closure_df(self.spark, pdim).select(
-                    F.col("member_id").alias("__m_p"),
-                    F.col("ancestor_id").alias("__a_p"),
-                    F.col("weight").alias("__w_p"),
-                )
-                src = df.join(
-                    engine._closure_side(pcdf, pdim),
-                    df[p_col] == F.col("__m_p"),
-                    "inner",
-                )
-                op_col, op_val = F.col("__a_p"), (
-                    F.col("value") * F.col("__w_p")
-                )
-                op_agg = F.sum  # rolled-up operand = weighted sum
-            else:
-                src, op_col, op_val = df, F.col(p_col), F.col("value")
-                op_agg = F.max  # exactly one base row per member
-            aggs = [
-                op_agg(
-                    F.when(op_col == int(m), op_val)
-                ).alias(f"__op_{int(m)}")
-                for m in plan.reads
-            ]
-            aggs.append(
-                F.max(
-                    F.when(op_col == int(feeder_midx), F.lit(1))
-                ).alias("__has_f")
-            )
-            aggs.append(F.first(wprod).alias("__w"))
-            grouped = src.groupBy(
-                *[F.col(c) for c in rest_cols]
-            ).agg(*aggs)
-            evald = grouped.where(F.col("__has_f").isNotNull())
-            vcol, ecol = arith.to_columns(
-                plan, lambda m: F.col(f"__op_{int(m)}")
-            )
-            res = evald.select(
-                vcol.alias("v"), ecol.alias("err"),
-                F.col("__w").alias("w"),
-            ).agg(
-                F.sum(F.col("v") * F.col("w")).alias("total"),
-                F.count(F.lit(1)).alias("n"),
-                F.min("err").alias("err"),
-            ).collect()[0]
-            self._last_base_rule_path = "compiled"
-            if res["err"] is not None:
-                return res["err"]
-            if res["n"] == 0:
-                return None
-            return res["total"] if res["total"] is not None else 0.0
-        p_leaves = None
-        if needs_closure:
-            # Expand dim p through its closure (broadcast join) so the
-            # per-cell value map carries AGGREGATED p-members too —
-            # correct rolled-up values for aggregated triggers/feeders
-            # and for data-dependent runtime reads the one-row probe
-            # never saw (ADVICE r2 medium: these previously read None off
-            # the leaf-only map).  Closure self-rows keep every base
-            # member in the map.  Costs one extra shuffle, so taken only
-            # when an aggregated member is actually in play.
-            pcdf = engine.closure_df(self.spark, pdim).select(
-                F.col("member_id").alias("__m_p"),
-                F.col("ancestor_id").alias("__a_p"),
-                F.col("weight").alias("__w_p"),
-            )
-            dfp = df.join(
-                engine._closure_side(pcdf, pdim),
-                df[p_col] == F.col("__m_p"),
-                "inner",
-            )
-            rolled = dfp.groupBy(
-                *[F.col(c) for c in rest_cols], F.col("__a_p")
-            ).agg(
-                F.sum(F.col("value") * F.col("__w_p")).alias("__pval"),
-                F.first(wprod).alias("__w0"),
-            )
-            grouped = rolled.groupBy(*[F.col(c) for c in rest_cols]).agg(
-                F.map_from_entries(
-                    F.collect_list(
-                        F.struct(F.col("__a_p"), F.col("__pval"))
-                    )
-                ).alias("__vals"),
-                F.first(F.col("__w0")).alias("__w"),
-            )
-        else:
-            # leaf-only fast path: ONE shuffle; a runtime read of an
-            # aggregated member raises _NonLocalRead in _SliceCell via
-            # p_leaves -> driver fallback (correct, never silent)
-            p_leaves = frozenset(
-                i for i, d in pdim._defs.items() if d.level == 0
-            )
-            grouped = df.groupBy(*[F.col(c) for c in rest_cols]).agg(
-                F.map_from_entries(
-                    F.collect_list(F.struct(F.col(p_col), F.col("value")))
-                ).alias("__vals"),
-                F.first(wprod).alias("__w"),
-            )
-        # context shipped to executors: per-dim name->idx resolution and
-        # idx->name maps (small metadata), matching Cell._resolve_modifier
-        dim_lookups = [
-            ({k: v for k, v in dim._lookup.items()}, dim.name.lower())
-            for dim in self.dimensions
-        ]
-        id_names = [
-            {d.idx: d.name for d in dim._iter_defs()}
-            for dim in self.dimensions
-        ]
-        fn = rdef.function
-        n_dims = len(self._cols)
-
-        def run(batches):
-            import pandas as pd
-
-            from tinyolap_spark.rules import CONTINUE as _CONT
-            from tinyolap_spark.rules import map_rule_error as _map_err
-
-            for pdf in batches:
-                out_v, out_err = [], []
-                for row in pdf.to_dict("records"):
-                    vals = row["__vals"] or {}
-                    rest = [row[c] for c in rest_cols]
-                    cell = _SliceCell(
-                        p, rest_cols, rest, trigger_midx, vals,
-                        dim_lookups, id_names, n_dims, p_col, p_leaves,
-                    )
-                    err = None
-                    try:
-                        v = fn(cell)
-                    except _NonLocalRead:
-                        out_v.append(None)
-                        out_err.append("__nonlocal__")
-                        continue
-                    except Exception as exc:  # noqa: BLE001
-                        out_v.append(None)
-                        out_err.append(_map_err(exc))
-                        continue
-                    if v is _CONT:
-                        v = vals.get(feeder_midx)
-                    if isinstance(v, bool) or not isinstance(v, (int, float)):
-                        v = None
-                    out_v.append(float(v) if v is not None else None)
-                    out_err.append(err)
-                yield pd.DataFrame(
-                    {
-                        "v": pd.Series(out_v, dtype="float64"),
-                        "w": pd.Series(
-                            [row["__w"] for row in pdf.to_dict("records")],
-                            dtype="float64",
-                        ),
-                        "err": pd.Series(out_err, dtype="object"),
-                    }
-                )
-
-        # only groups holding a feeder row are evaluation points
-        evald = grouped.where(
-            F.map_contains_key(F.col("__vals"), F.lit(int(feeder_midx)))
-        )
-        try:
-            res = evald.mapInPandas(
-                run, schema="v double, w double, err string"
-            ).agg(
-                F.sum(F.col("v") * F.col("w")).alias("total"),
-                F.count(F.lit(1)).alias("n"),
-                F.min("err").alias("err"),
-                F.max(
-                    F.coalesce(
-                        F.col("err") == F.lit("__nonlocal__"), F.lit(False)
-                    )
-                ).alias("nonloc"),
-            ).collect()[0]
-        except Exception:  # noqa: BLE001 — unpicklable rule etc.
-            return _FALLBACK
-        if res["nonloc"]:
-            return _FALLBACK
-        self._last_base_rule_path = "executor"
-        if res["err"] is not None:
-            return res["err"]
-        if res["n"] == 0:
-            return None
-        return res["total"] if res["total"] is not None else 0.0
 
     # --------------------------------------------------------------- rules
     def register_rule(
