@@ -116,6 +116,18 @@ def read_tier(request, monkeypatch):
     return request.param
 
 
+def each_read_tier(monkeypatch):
+    """Yield ``"copy"``, then ``"spark"`` with ``CELL_LIMIT = 0``: the two
+    settings of the ``read_tier`` fixture inside ONE test.  A cube keeps
+    the copy it has already built, so the loop body builds its own."""
+    from tinyolap_spark import local
+
+    yield "copy"
+    with monkeypatch.context() as m:
+        m.setattr(local, "CELL_LIMIT", 0)
+        yield "spark"
+
+
 @pytest.fixture(scope="session")
 def tiny(spark):
     return build_tiny(spark)

@@ -4,6 +4,8 @@ import pytest
 
 from tinyolap_spark import CONTINUE, Database, RuleScope, View, rule
 
+from conftest import each_read_tier
+
 
 @pytest.fixture(scope="module")
 def fresh(spark):
@@ -123,21 +125,24 @@ def test_area_copy_assignment(fresh):
     assert a23 == pytest.approx(a22 * 1.5)
 
 
-def test_view_grid_matches_point_reads(fresh):
-    db, cube, rows = fresh
-    v = View(
-        cube,
-        filters=[("years", "2021"), ("months", "Year")],
-        rows=[("regions", "*")],
-        columns=[("measures", ["Sales", "Cost", "Profit"])],
-    ).refresh()
-    for region in ["Total", "North", "South", "West", "East"]:
-        for measure in ["Sales", "Cost", "Profit"]:
-            grid_v = v.cell_by_names([region], [measure])
-            point_v = cube["2021", "Year", region, "Total", measure]
-            assert grid_v == pytest.approx(point_v), (region, measure)
-    assert v.stats["cells"] == 5 * 3
-    assert v.stats["executed_as"] == "single_spark_job"
+def test_view_grid_matches_point_reads(spark, monkeypatch):
+    from conftest import build_tiny
+
+    for tier in each_read_tier(monkeypatch):
+        db, cube, rows = build_tiny(spark, seed=7)
+        v = View(
+            cube,
+            filters=[("years", "2021"), ("months", "Year")],
+            rows=[("regions", "*")],
+            columns=[("measures", ["Sales", "Cost", "Profit"])],
+        ).refresh()
+        for region in ["Total", "North", "South", "West", "East"]:
+            for measure in ["Sales", "Cost", "Profit"]:
+                grid_v = v.cell_by_names([region], [measure])
+                point_v = cube["2021", "Year", region, "Total", measure]
+                assert grid_v == pytest.approx(point_v), (region, measure)
+        assert v.stats["cells"] == 5 * 3
+        assert v.stats["executed_as"] == ("local" if tier == "copy" else "spark")
 
 
 def test_view_nested_axes_and_renderers(fresh):
@@ -401,115 +406,121 @@ def test_dense_fill_respects_existing_rows(spark):
     assert area.sum() == pytest.approx(12 * 4 * 3 * 5.0)
 
 
-def test_base_rule_executor_path_large_feeder(spark):
+def test_base_rule_executor_path_large_feeder(spark, monkeypatch):
     """VERDICT r1 #2: BASE_LEVEL+feeder rules must not collect base rows to
     the driver.  1e5-row feeder slice evaluates executor-side (asserted via
     the path flag) and matches the closed-form expected sum."""
-    import pandas as pd
+    for tier in each_read_tier(monkeypatch):
+        import pandas as pd
 
-    from tinyolap_spark.metadata import Dimension
+        from tinyolap_spark.metadata import Dimension
 
-    db = Database("feeder_big", spark=spark)
-    keys = db.add_dimension("keys").edit()
-    # 100k leaves + the top sits exactly ONE member over the r9 broadcast
-    # envelope — raise it explicitly (the documented escape hatch; this
-    # workload is the envelope's calibration point)
-    keys.add_many("AllKeys", [f"k{i}" for i in range(100_000)])
-    prior = Dimension.MAX_BROADCAST_MEMBERS
-    Dimension.MAX_BROADCAST_MEMBERS = 120_000
-    try:
-        keys.commit()
-    finally:
-        Dimension.MAX_BROADCAST_MEMBERS = prior
-    measures = db.add_dimension("measures").edit()
-    measures.add_many("Quantity")
-    measures.add_many("Price")
-    measures.add_many("Sales")
-    measures.commit()
-    cube = db.add_cube("big", [keys, measures])
-    qid = {m.name: m.index for m in keys.leaf_members}
-    quantity_idx = measures.member("Quantity").index
-    price_idx = measures.member("Price").index
-    rows = []
-    for i in range(100_000):
-        rows.append((qid[f"k{i}"], quantity_idx, float(i % 10), None))
-        rows.append((qid[f"k{i}"], price_idx, 2.0, None))
-    pdf = pd.DataFrame(rows, columns=["keys", "measures", "value", "value_str"])
-    cube.load_dataframe(
-        spark.createDataFrame(pdf, schema=cube._schema), assume_unique=True
-    )
+        db = Database("feeder_big", spark=spark)
+        keys = db.add_dimension("keys").edit()
+        # 100k leaves + the top sits exactly ONE member over the r9 broadcast
+        # envelope — raise it explicitly (the documented escape hatch; this
+        # workload is the envelope's calibration point)
+        keys.add_many("AllKeys", [f"k{i}" for i in range(100_000)])
+        prior = Dimension.MAX_BROADCAST_MEMBERS
+        Dimension.MAX_BROADCAST_MEMBERS = 120_000
+        try:
+            keys.commit()
+        finally:
+            Dimension.MAX_BROADCAST_MEMBERS = prior
+        measures = db.add_dimension("measures").edit()
+        measures.add_many("Quantity")
+        measures.add_many("Price")
+        measures.add_many("Sales")
+        measures.commit()
+        cube = db.add_cube("big", [keys, measures])
+        qid = {m.name: m.index for m in keys.leaf_members}
+        quantity_idx = measures.member("Quantity").index
+        price_idx = measures.member("Price").index
+        rows = []
+        for i in range(100_000):
+            rows.append((qid[f"k{i}"], quantity_idx, float(i % 10), None))
+            rows.append((qid[f"k{i}"], price_idx, 2.0, None))
+        pdf = pd.DataFrame(rows, columns=["keys", "measures", "value", "value_str"])
+        cube.load_dataframe(
+            spark.createDataFrame(pdf, schema=cube._schema), assume_unique=True
+        )
 
-    def sales_rule(c):
-        return c["Quantity"] * c["Price"]
+        def sales_rule(c):
+            return c["Quantity"] * c["Price"]
 
-    cube.register_rule(
-        sales_rule, trigger=["measures:Sales"], scope=RuleScope.BASE_LEVEL,
-        feeder=["measures:Quantity"],
-    )
-    expected = sum((i % 10) * 2.0 for i in range(100_000))
-    assert cube["AllKeys", "Sales"] == pytest.approx(expected)
-    assert cube._last_base_rule_path == "compiled"
-    # CONTINUE falls through to the feeder row's stored value
-    def passthrough(c):
-        if c["Price"] is None:
-            return CONTINUE
-        return c["Quantity"] * c["Price"]
-    cube2_expected = expected  # all rows have Price
-    assert cube["AllKeys", "Quantity"] == pytest.approx(
-        sum(i % 10 for i in range(100_000))
-    )
+        cube.register_rule(
+            sales_rule, trigger=["measures:Sales"], scope=RuleScope.BASE_LEVEL,
+            feeder=["measures:Quantity"],
+        )
+        expected = sum((i % 10) * 2.0 for i in range(100_000))
+        assert cube["AllKeys", "Sales"] == pytest.approx(expected)
+        assert cube._last_base_rule_path == "compiled"
+        # CONTINUE falls through to the feeder row's stored value
+        def passthrough(c):
+            if c["Price"] is None:
+                return CONTINUE
+            return c["Quantity"] * c["Price"]
+        cube2_expected = expected  # all rows have Price
+        assert cube["AllKeys", "Quantity"] == pytest.approx(
+            sum(i % 10 for i in range(100_000))
+        )
+        assert (cube._local is not None) == (tier == "copy")
 
 
-def test_base_rule_cross_dim_read_falls_back_to_driver(spark):
+def test_base_rule_cross_dim_read_falls_back_to_driver(spark, monkeypatch):
     """A rule reading across another dimension is ineligible for the
     slice-local executor path; the driver loop (full cube re-entry) still
     produces correct aggregates."""
-    db = Database("feeder_xdim", spark=spark)
-    months = db.add_dimension("months").edit()
-    months.add_many("Q1", ["Jan", "Feb"])
-    months.commit()
-    measures = db.add_dimension("measures").edit()
-    measures.add_many("Quantity")
-    measures.add_many("Sales")
-    measures.commit()
-    cube = db.add_cube("c", [months, measures])
-    cube.write_rows([
-        ("Jan", "Quantity", 10.0),
-        ("Feb", "Quantity", 20.0),
-    ])
+    for tier in each_read_tier(monkeypatch):
+        db = Database("feeder_xdim", spark=spark)
+        months = db.add_dimension("months").edit()
+        months.add_many("Q1", ["Jan", "Feb"])
+        months.commit()
+        measures = db.add_dimension("measures").edit()
+        measures.add_many("Quantity")
+        measures.add_many("Sales")
+        measures.commit()
+        cube = db.add_cube("c", [months, measures])
+        cube.write_rows([
+            ("Jan", "Quantity", 10.0),
+            ("Feb", "Quantity", 20.0),
+        ])
 
-    def jan_anchor(c):
-        # reads a DIFFERENT month (cross-dimension shift) — not slice-local
-        return c["Quantity"] + c["months:Jan", "Quantity"]
+        def jan_anchor(c):
+            # reads a DIFFERENT month (cross-dimension shift) — not slice-local
+            return c["Quantity"] + c["months:Jan", "Quantity"]
 
-    cube.register_rule(
-        jan_anchor, trigger=["measures:Sales"], scope=RuleScope.BASE_LEVEL,
-        feeder=["measures:Quantity"],
-    )
-    # Jan: 10+10=20, Feb: 20+10=30 => Q1 Sales = 50
-    assert cube["Q1", "Sales"] == pytest.approx(50.0)
-    assert cube._last_base_rule_path == "driver"
+        cube.register_rule(
+            jan_anchor, trigger=["measures:Sales"], scope=RuleScope.BASE_LEVEL,
+            feeder=["measures:Quantity"],
+        )
+        # Jan: 10+10=20, Feb: 20+10=30 => Q1 Sales = 50
+        assert cube["Q1", "Sales"] == pytest.approx(50.0)
+        assert cube._last_base_rule_path == "driver"
+        assert (cube._local is not None) == (tier == "copy")
 
 
-def test_base_rule_error_sentinel_distributed(spark):
+def test_base_rule_error_sentinel_distributed(spark, monkeypatch):
     """Rule raising on some slice rows maps to the spreadsheet sentinel,
     same as the driver path (reference cube.py:357-367)."""
-    db = Database("feeder_err", spark=spark)
-    months = db.add_dimension("months").edit()
-    months.add_many("Q1", ["Jan", "Feb"])
-    months.commit()
-    measures = db.add_dimension("measures").edit()
-    measures.add_many("Quantity")
-    measures.add_many("Sales")
-    measures.commit()
-    cube = db.add_cube("c", [months, measures])
-    cube.write_rows([("Jan", "Quantity", 10.0), ("Feb", "Quantity", 0.0)])
+    for tier in each_read_tier(monkeypatch):
+        db = Database("feeder_err", spark=spark)
+        months = db.add_dimension("months").edit()
+        months.add_many("Q1", ["Jan", "Feb"])
+        months.commit()
+        measures = db.add_dimension("measures").edit()
+        measures.add_many("Quantity")
+        measures.add_many("Sales")
+        measures.commit()
+        cube = db.add_cube("c", [months, measures])
+        cube.write_rows([("Jan", "Quantity", 10.0), ("Feb", "Quantity", 0.0)])
 
-    def div_rule(c):
-        return 1.0 / c["Quantity"]  # Feb divides by zero
+        def div_rule(c):
+            return 1.0 / c["Quantity"]  # Feb divides by zero
 
-    cube.register_rule(
-        div_rule, trigger=["measures:Sales"], scope=RuleScope.BASE_LEVEL,
-        feeder=["measures:Quantity"],
-    )
-    assert cube["Q1", "Sales"] == "#DIV/0!"
+        cube.register_rule(
+            div_rule, trigger=["measures:Sales"], scope=RuleScope.BASE_LEVEL,
+            feeder=["measures:Quantity"],
+        )
+        assert cube["Q1", "Sales"] == "#DIV/0!"
+        assert (cube._local is not None) == (tier == "copy")

@@ -15,6 +15,8 @@ import pytest
 from tinyolap_spark import Database, RuleScope
 from tinyolap_spark import arith
 
+from conftest import each_read_tier
+
 
 # ---------------------------------------------------------------------------
 # driver-side unit tests (no Spark): trace + mirror semantics
@@ -69,8 +71,8 @@ def test_trace_guarded_rule_compiles_nullprop():
     plan = _plan(guarded)
     assert plan is not None and plan.policy == "nullprop"
     assert set(plan.reads) == {10, 11}
-    assert arith.eval_tree(plan.tree, plan.reads, {10: 3.0, 11: 2.0}, plan.policy) == (6.0, None)
-    assert arith.eval_tree(plan.tree, plan.reads, {10: 3.0}, plan.policy) == (None, None)
+    assert arith.evaluate_dicts(plan, [{10: 3.0, 11: 2.0}])[0] == (6.0, None)
+    assert arith.evaluate_dicts(plan, [{10: 3.0}])[0] == (None, None)
 
 
 def test_trace_unguarded_rule_compiles_nullerr():
@@ -79,7 +81,7 @@ def test_trace_unguarded_rule_compiles_nullerr():
 
     plan = _plan(unguarded)
     assert plan is not None and plan.policy == "nullerr"
-    v, err = arith.eval_tree(plan.tree, plan.reads, {10: 3.0}, plan.policy)
+    v, err = arith.evaluate_dicts(plan, [{10: 3.0}])[0]
     assert (v, err) == (None, "#ERR!")
 
 
@@ -89,8 +91,8 @@ def test_trace_division_sentinels():
 
     plan = _plan(ratio)
     assert plan is not None
-    assert arith.eval_tree(plan.tree, plan.reads, {10: 6.0, 11: 2.0}, plan.policy) == (3.0, None)
-    v, err = arith.eval_tree(plan.tree, plan.reads, {10: 6.0, 11: 0.0}, plan.policy)
+    assert arith.evaluate_dicts(plan, [{10: 6.0, 11: 2.0}])[0] == (3.0, None)
+    v, err = arith.evaluate_dicts(plan, [{10: 6.0, 11: 0.0}])[0]
     assert (v, err) == (None, "#DIV/0!")
 
 
@@ -105,10 +107,10 @@ def test_concolic_comparison_branch_compiles():
 
     plan = _plan(branchy)
     assert plan is not None and plan.policy == "nullerr"
-    assert arith.eval_tree(plan.tree, plan.reads, {10: 9.0}, plan.policy) == (9.0, None)
-    assert arith.eval_tree(plan.tree, plan.reads, {10: 3.0}, plan.policy) == (0.0, None)
+    assert arith.evaluate_dicts(plan, [{10: 9.0}])[0] == (9.0, None)
+    assert arith.evaluate_dicts(plan, [{10: 3.0}])[0] == (0.0, None)
     # comparison with a missing operand raises TypeError in Python -> #ERR!
-    assert arith.eval_tree(plan.tree, plan.reads, {}, plan.policy) == (None, "#ERR!")
+    assert arith.evaluate_dicts(plan, [{}])[0] == (None, "#ERR!")
 
 
 def test_concolic_or_default_compiles():
@@ -119,9 +121,9 @@ def test_concolic_or_default_compiles():
 
     plan = _plan(boolish)
     assert plan is not None
-    assert arith.eval_tree(plan.tree, plan.reads, {10: 4.0}, plan.policy) == (5.0, None)
-    assert arith.eval_tree(plan.tree, plan.reads, {10: 0.0}, plan.policy) == (1.0, None)
-    assert arith.eval_tree(plan.tree, plan.reads, {}, plan.policy) == (1.0, None)
+    assert arith.evaluate_dicts(plan, [{10: 4.0}])[0] == (5.0, None)
+    assert arith.evaluate_dicts(plan, [{10: 0.0}])[0] == (1.0, None)
+    assert arith.evaluate_dicts(plan, [{}])[0] == (1.0, None)
 
 
 def test_concolic_profit_pct_shape():
@@ -137,10 +139,10 @@ def test_concolic_profit_pct_shape():
 
     plan = _plan(profit_pct, trigger=11)
     assert plan is not None
-    assert arith.eval_tree(plan.tree, plan.reads, {12: 8.0, 10: 2.0}, plan.policy) == (0.25, None)
+    assert arith.evaluate_dicts(plan, [{12: 8.0, 10: 2.0}])[0] == (0.25, None)
     # sales 0 or missing -> guard False -> None, no sentinel
-    assert arith.eval_tree(plan.tree, plan.reads, {12: 0.0, 10: 2.0}, plan.policy) == (None, None)
-    assert arith.eval_tree(plan.tree, plan.reads, {10: 2.0}, plan.policy) == (None, None)
+    assert arith.evaluate_dicts(plan, [{12: 0.0, 10: 2.0}])[0] == (None, None)
+    assert arith.evaluate_dicts(plan, [{10: 2.0}])[0] == (None, None)
 
 
 def test_trace_rejects_noncompilable_ops():
@@ -227,216 +229,234 @@ def _compare_paths(spark, cube, rule_fn, addrs, monkeypatch):
 def test_compiled_matches_opaque_on_bench_rule(spark, monkeypatch):
     """The bench's guarded Sales = Quantity x Price rule: compiled and
     opaque tiers agree on aggregated, base and top addresses."""
-    db, cube = _bench_shaped_cube(spark, "arith_bench")
+    for tier in each_read_tier(monkeypatch):
+        db, cube = _bench_shaped_cube(spark, f"arith_bench_{tier}")
 
-    def sales_rule(c):
-        q = c["Quantity"]
-        p = c["Price"]
-        if q is not None and p is not None:
-            return q * p
+        def sales_rule(c):
+            q = c["Quantity"]
+            p = c["Price"]
+            if q is not None and p is not None:
+                return q * p
 
-    addrs = (
-        [(f"grp{g}", "Sales") for g in range(3)]
-        + [("AllKeys", "Sales")]
-    )
-    got = _compare_paths(spark, cube, sales_rule, addrs, monkeypatch)
-    assert got[0] == pytest.approx(sum(2.0 * (i + 1) for i in range(4)))
-    assert got[3] == pytest.approx(sum(2.0 * (i + 1) for i in range(12)))
+        addrs = (
+            [(f"grp{g}", "Sales") for g in range(3)]
+            + [("AllKeys", "Sales")]
+        )
+        got = _compare_paths(spark, cube, sales_rule, addrs, monkeypatch)
+        assert got[0] == pytest.approx(sum(2.0 * (i + 1) for i in range(4)))
+        assert got[3] == pytest.approx(sum(2.0 * (i + 1) for i in range(12)))
+        assert (cube._local is not None) == (tier == "copy")
 
 
 def test_compiled_matches_opaque_with_missing_operand(spark, monkeypatch):
     """Guarded rule + a key with no Price row: both tiers must skip that
     evaluation point (None, not 0-coerced, not an error)."""
-    db, cube = _bench_shaped_cube(spark, "arith_gap", with_gap=True)
+    for tier in each_read_tier(monkeypatch):
+        db, cube = _bench_shaped_cube(spark, f"arith_gap_{tier}", with_gap=True)
 
-    def sales_rule(c):
-        q = c["Quantity"]
-        p = c["Price"]
-        if q is not None and p is not None:
-            return q * p
+        def sales_rule(c):
+            q = c["Quantity"]
+            p = c["Price"]
+            if q is not None and p is not None:
+                return q * p
 
-    addrs = [("grp1", "Sales"), ("AllKeys", "Sales"), ("grp0", "Sales")]
-    got = _compare_paths(spark, cube, sales_rule, addrs, monkeypatch)
-    # grp1 covers k4..k7; k5 contributes nothing
-    assert got[0] == pytest.approx(sum(2.0 * (i + 1) for i in (4, 6, 7)))
+        addrs = [("grp1", "Sales"), ("AllKeys", "Sales"), ("grp0", "Sales")]
+        got = _compare_paths(spark, cube, sales_rule, addrs, monkeypatch)
+        # grp1 covers k4..k7; k5 contributes nothing
+        assert got[0] == pytest.approx(sum(2.0 * (i + 1) for i in (4, 6, 7)))
+        assert (cube._local is not None) == (tier == "copy")
 
 
 def test_compiled_matches_opaque_error_sentinel(spark, monkeypatch):
     """Unguarded rule + a missing operand: both tiers surface #ERR!."""
-    db, cube = _bench_shaped_cube(spark, "arith_err", with_gap=True)
+    for tier in each_read_tier(monkeypatch):
+        db, cube = _bench_shaped_cube(spark, f"arith_err_{tier}", with_gap=True)
 
-    def sales_rule(c):
-        return c["Quantity"] * c["Price"]
+        def sales_rule(c):
+            return c["Quantity"] * c["Price"]
 
-    addrs = [("grp1", "Sales"), ("grp0", "Sales")]
-    got = _compare_paths(spark, cube, sales_rule, addrs, monkeypatch)
-    assert got[0] == "#ERR!"
-    assert got[1] == pytest.approx(sum(2.0 * (i + 1) for i in range(4)))
+        addrs = [("grp1", "Sales"), ("grp0", "Sales")]
+        got = _compare_paths(spark, cube, sales_rule, addrs, monkeypatch)
+        assert got[0] == "#ERR!"
+        assert got[1] == pytest.approx(sum(2.0 * (i + 1) for i in range(4)))
+        assert (cube._local is not None) == (tier == "copy")
 
 
 def test_compiled_matches_opaque_truthiness_guard(spark, monkeypatch):
     """The reference `Profit in %` shape (`samples/tiny.py:137-144`):
     `if denom:` guard around a division — zero AND missing denominators
     both take the None branch on both tiers; no sentinel leaks."""
-    db, cube = _bench_shaped_cube(
-        spark, "arith_truthy", with_gap=True, with_zero_price=True
-    )
+    for tier in each_read_tier(monkeypatch):
+        db, cube = _bench_shaped_cube(
+            spark, f"arith_truthy_{tier}", with_gap=True, with_zero_price=True
+        )
 
-    def pct_rule(c):
-        p = c["Price"]
-        q = c["Quantity"]
-        if p:
-            return q / p
-        return None
+        def pct_rule(c):
+            p = c["Price"]
+            q = c["Quantity"]
+            if p:
+                return q / p
+            return None
 
-    addrs = [
-        ("grp0", "Sales"),
-        ("grp1", "Sales"),  # k5 has no Price (guard False)
-        ("AllKeys", "Sales"),  # k7 has Price 0.0 (guard False)
-    ]
-    got = _compare_paths(spark, cube, pct_rule, addrs, monkeypatch)
-    assert got[0] == pytest.approx(sum((i + 1) / 2.0 for i in range(4)))
-    # grp1: k5 (no Price) AND k7 (Price 0.0) skipped by the guard
-    assert got[1] == pytest.approx(sum((i + 1) / 2.0 for i in (4, 6)))
+        addrs = [
+            ("grp0", "Sales"),
+            ("grp1", "Sales"),  # k5 has no Price (guard False)
+            ("AllKeys", "Sales"),  # k7 has Price 0.0 (guard False)
+        ]
+        got = _compare_paths(spark, cube, pct_rule, addrs, monkeypatch)
+        assert got[0] == pytest.approx(sum((i + 1) / 2.0 for i in range(4)))
+        # grp1: k5 (no Price) AND k7 (Price 0.0) skipped by the guard
+        assert got[1] == pytest.approx(sum((i + 1) / 2.0 for i in (4, 6)))
+        assert (cube._local is not None) == (tier == "copy")
 
 
 def test_compiled_matches_opaque_comparison_branch(spark, monkeypatch):
     """Comparison fork on the executor tier: a floor on the computed
     value evaluates identically compiled and opaque."""
-    db, cube = _bench_shaped_cube(spark, "arith_cmp")
+    for tier in each_read_tier(monkeypatch):
+        db, cube = _bench_shaped_cube(spark, f"arith_cmp_{tier}")
 
-    def floored(c):
-        q = c["Quantity"]
-        p = c["Price"]
-        if q is None or p is None:
-            return None
-        v = q * p
-        if v > 10.0:
-            return v
-        return 10.0
+        def floored(c):
+            q = c["Quantity"]
+            p = c["Price"]
+            if q is None or p is None:
+                return None
+            v = q * p
+            if v > 10.0:
+                return v
+            return 10.0
 
-    addrs = [("grp0", "Sales"), ("grp2", "Sales")]
-    got = _compare_paths(spark, cube, floored, addrs, monkeypatch)
-    assert got[0] == pytest.approx(
-        sum(max(2.0 * (i + 1), 10.0) for i in range(4))
-    )
-    assert got[1] == pytest.approx(
-        sum(max(2.0 * (i + 1), 10.0) for i in range(8, 12))
-    )
+        addrs = [("grp0", "Sales"), ("grp2", "Sales")]
+        got = _compare_paths(spark, cube, floored, addrs, monkeypatch)
+        assert got[0] == pytest.approx(
+            sum(max(2.0 * (i + 1), 10.0) for i in range(4))
+        )
+        assert got[1] == pytest.approx(
+            sum(max(2.0 * (i + 1), 10.0) for i in range(8, 12))
+        )
+        assert (cube._local is not None) == (tier == "copy")
 
 
 def test_compiled_matches_opaque_div_zero(spark, monkeypatch):
     """Division rule + a zero denominator: both tiers surface #DIV/0!."""
-    db, cube = _bench_shaped_cube(
-        spark, "arith_div0", with_zero_price=True
-    )
+    for tier in each_read_tier(monkeypatch):
+        db, cube = _bench_shaped_cube(
+            spark, f"arith_div0_{tier}", with_zero_price=True
+        )
 
-    def ratio_rule(c):
-        return c["Quantity"] / c["Price"]
+        def ratio_rule(c):
+            return c["Quantity"] / c["Price"]
 
-    addrs = [("grp1", "Sales"), ("grp0", "Sales")]
-    got = _compare_paths(spark, cube, ratio_rule, addrs, monkeypatch)
-    assert got[0] == "#DIV/0!"  # k7 divides by zero
-    assert got[1] == pytest.approx(sum((i + 1) / 2.0 for i in range(4)))
+        addrs = [("grp1", "Sales"), ("grp0", "Sales")]
+        got = _compare_paths(spark, cube, ratio_rule, addrs, monkeypatch)
+        assert got[0] == "#DIV/0!"  # k7 divides by zero
+        assert got[1] == pytest.approx(sum((i + 1) / 2.0 for i in range(4)))
+        assert (cube._local is not None) == (tier == "copy")
 
 
-def test_capped_branch_rule_compiles_correctly(spark):
+def test_capped_branch_rule_compiles_correctly(spark, monkeypatch):
     """A conditional-expression body (`v if v < 10 else 10`) forks on a
     comparison and compiles; values match the Python semantics."""
-    db, cube = _bench_shaped_cube(spark, "arith_branchy")
+    for tier in each_read_tier(monkeypatch):
+        db, cube = _bench_shaped_cube(spark, f"arith_branchy_{tier}")
 
-    def capped(c):
-        q = c["Quantity"]
-        p = c["Price"]
-        if q is None or p is None:
-            return None
-        v = q * p
-        return v if v < 10.0 else 10.0
+        def capped(c):
+            q = c["Quantity"]
+            p = c["Price"]
+            if q is None or p is None:
+                return None
+            v = q * p
+            return v if v < 10.0 else 10.0
 
-    cube.register_rule(
-        capped, trigger=["measures:Sales"],
-        scope=RuleScope.BASE_LEVEL, feeder=["measures:Quantity"],
-    )
-    got = cube["grp0", "Sales"]
-    assert cube._last_base_rule_path == "compiled"
-    assert got == pytest.approx(sum(min(2.0 * (i + 1), 10.0) for i in range(4)))
+        cube.register_rule(
+            capped, trigger=["measures:Sales"],
+            scope=RuleScope.BASE_LEVEL, feeder=["measures:Quantity"],
+        )
+        got = cube["grp0", "Sales"]
+        assert cube._last_base_rule_path == "compiled"
+        assert got == pytest.approx(sum(min(2.0 * (i + 1), 10.0) for i in range(4)))
+        assert (cube._local is not None) == (tier == "copy")
 
 
-def test_noncompilable_rule_still_correct(spark):
+def test_noncompilable_rule_still_correct(spark, monkeypatch):
     """A body using non-arithmetic operations stays on the opaque tiers
     and is correct."""
-    import math as _math
+    for tier in each_read_tier(monkeypatch):
+        import math as _math
 
-    db, cube = _bench_shaped_cube(spark, "arith_opaque")
+        db, cube = _bench_shaped_cube(spark, f"arith_opaque_{tier}")
 
-    def rooty(c):
-        q = c["Quantity"]
-        p = c["Price"]
-        if q is None or p is None:
-            return None
-        return _math.sqrt(q * p)
+        def rooty(c):
+            q = c["Quantity"]
+            p = c["Price"]
+            if q is None or p is None:
+                return None
+            return _math.sqrt(q * p)
 
-    cube.register_rule(
-        rooty, trigger=["measures:Sales"],
-        scope=RuleScope.BASE_LEVEL, feeder=["measures:Quantity"],
-    )
-    got = cube["grp0", "Sales"]
-    assert cube._last_base_rule_path != "compiled"
-    assert got == pytest.approx(
-        sum(_math.sqrt(2.0 * (i + 1)) for i in range(4))
-    )
+        cube.register_rule(
+            rooty, trigger=["measures:Sales"],
+            scope=RuleScope.BASE_LEVEL, feeder=["measures:Quantity"],
+        )
+        got = cube["grp0", "Sales"]
+        assert cube._last_base_rule_path != "compiled"
+        assert got == pytest.approx(
+            sum(_math.sqrt(2.0 * (i + 1)) for i in range(4))
+        )
+        assert (cube._local is not None) == (tier == "copy")
 
 
-def test_compiled_tier_survives_sibling_rules_on_same_dimension(spark):
+def test_compiled_tier_survives_sibling_rules_on_same_dimension(spark, monkeypatch):
     """A model with several rules on the measures dimension (the common
     enterprise shape) must still compile: a sibling rule interferes only
     when it triggers on a member the compiled rule actually READS."""
-    db, cube = _bench_shaped_cube(spark, "arith_sibling")
+    for tier in each_read_tier(monkeypatch):
+        db, cube = _bench_shaped_cube(spark, f"arith_sibling_{tier}")
 
-    def sales(c):
-        q, p = c["Quantity"], c["Price"]
-        if q is not None and p is not None:
-            return q * p
+        def sales(c):
+            q, p = c["Quantity"], c["Price"]
+            if q is not None and p is not None:
+                return q * p
 
-    def double_q(c):
-        q = c["Quantity"]
-        return (q or 0.0) * 2.0  # opaque on purpose
+        def double_q(c):
+            q = c["Quantity"]
+            return (q or 0.0) * 2.0  # opaque on purpose
 
-    cube.register_rule(
-        sales, trigger=["measures:Sales"],
-        scope=RuleScope.BASE_LEVEL, feeder=["measures:Quantity"],
-    )
-    # sibling rule on the SAME dimension but a member `sales` never reads
-    cube.register_rule(
-        double_q, trigger=["measures:Price"], scope=RuleScope.BASE_LEVEL,
-    )
-    # `sales` READS Price, which double_q redefines -> must NOT compile
-    got = cube["grp0", "Sales"]
-    assert cube._last_base_rule_path == "driver"
-    # driver path applies double_q to Price reads: price = q*2
-    assert got == pytest.approx(sum((i + 1) * (i + 1) * 2.0 for i in range(4)))
+        cube.register_rule(
+            sales, trigger=["measures:Sales"],
+            scope=RuleScope.BASE_LEVEL, feeder=["measures:Quantity"],
+        )
+        # sibling rule on the SAME dimension but a member `sales` never reads
+        cube.register_rule(
+            double_q, trigger=["measures:Price"], scope=RuleScope.BASE_LEVEL,
+        )
+        # `sales` READS Price, which double_q redefines -> must NOT compile
+        got = cube["grp0", "Sales"]
+        assert cube._last_base_rule_path == "driver"
+        # driver path applies double_q to Price reads: price = q*2
+        assert got == pytest.approx(sum((i + 1) * (i + 1) * 2.0 for i in range(4)))
 
-    # now a sibling on a member nobody reads: compiled tier must survive
-    db2, cube2 = _bench_shaped_cube(spark, "arith_sibling2")
-    measures = cube2.dimensions[1]
-    med = measures.edit()
-    med.add_many("Other")
-    med.commit()
+        # now a sibling on a member nobody reads: compiled tier must survive
+        db2, cube2 = _bench_shaped_cube(spark, f"arith_sibling2_{tier}")
+        measures = cube2.dimensions[1]
+        med = measures.edit()
+        med.add_many("Other")
+        med.commit()
 
-    def other_rule(c):
-        return 1.0
+        def other_rule(c):
+            return 1.0
 
-    cube2.register_rule(
-        sales, trigger=["measures:Sales"],
-        scope=RuleScope.BASE_LEVEL, feeder=["measures:Quantity"],
-    )
-    cube2.register_rule(
-        other_rule, trigger=["measures:Other"],
-        scope=RuleScope.BASE_LEVEL,
-    )
-    got2 = cube2["grp0", "Sales"]
-    assert cube2._last_base_rule_path == "compiled"
-    assert got2 == pytest.approx(sum(2.0 * (i + 1) for i in range(4)))
+        cube2.register_rule(
+            sales, trigger=["measures:Sales"],
+            scope=RuleScope.BASE_LEVEL, feeder=["measures:Quantity"],
+        )
+        cube2.register_rule(
+            other_rule, trigger=["measures:Other"],
+            scope=RuleScope.BASE_LEVEL,
+        )
+        got2 = cube2["grp0", "Sales"]
+        assert cube2._last_base_rule_path == "compiled"
+        assert got2 == pytest.approx(sum(2.0 * (i + 1) for i in range(4)))
+        assert (cube._local is not None) == (tier == "copy")
 
 
 def test_batched_probe_is_one_job_for_empty_addresses(spark, monkeypatch):
@@ -507,7 +527,7 @@ def test_many_operand_rule_compiles():
     plan = arith._try_compile(cube, _RD(wide), 1, 50)
     assert plan is not None and len(plan.reads) == 14
     vals = {20 + i: float(i) for i in range(14)}
-    assert arith.eval_tree(plan.tree, plan.reads, vals, plan.policy) == (
+    assert arith.evaluate_dicts(plan, [vals])[0] == (
         sum(range(14)),
         None,
     )
@@ -534,9 +554,7 @@ def test_nan_comparison_matches_python_semantics(spark):
     assert plan is not None
     nan = float("nan")
     # mirror: NaN > 0 is False in Python -> the None branch
-    assert arith.eval_tree(
-        plan.tree, plan.reads, {11: nan, 10: 2.0}, plan.policy
-    ) == (None, None)
+    assert arith.evaluate_dicts(plan, [{11: nan, 10: 2.0}])[0] == (None, None)
     # Catalyst columns agree
     df = spark.createDataFrame(
         [(nan, 2.0)],

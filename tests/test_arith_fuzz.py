@@ -3,7 +3,7 @@
 them, and compare the compiled evaluator against the REAL Python body on
 operand grids far beyond the compiler's built-in verification samples.
 
-Driver-only (no Spark): `eval_tree` is the exact Python mirror of the
+Driver-only (no Spark): `evaluate` is the exact numpy twin of the
 generated Catalyst columns (kept in lockstep by construction and by the
 integration tests in `test_arith_compile.py`), so mirror-vs-body
 agreement here transfers to the compiled plan."""
@@ -169,7 +169,7 @@ def test_fuzz_compiled_mirror_matches_python_body():
             vals = _rand_vals(rng)
             expected = arith._normalize_expected(cube, _RD(body), 1, 13, vals)
             assert expected != "reject"
-            got = arith.eval_tree(plan.tree, plan.reads, vals, plan.policy)
+            got = arith.evaluate_dicts(plan, [vals])[0]
             assert expected[1] == got[1], (
                 f"err mismatch {expected} vs {got} vals={vals} "
                 f"policy={plan.policy} tree={plan.tree}"
@@ -185,7 +185,7 @@ def test_fuzz_compiled_mirror_matches_python_body():
 
 def test_fuzz_catalyst_columns_match_mirror(spark):
     """Close the loop mirror->Catalyst: random compiled plans evaluated
-    through to_columns() on a real DataFrame must agree with eval_tree
+    through to_columns() on a real DataFrame must agree with evaluate
     row-for-row (value AND sentinel), including mixed None/0 operands."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
@@ -229,7 +229,7 @@ def test_fuzz_catalyst_columns_match_mirror(spark):
                 for j, mid in enumerate(_MIDS.values())
                 if g[1 + j] is not None
             }
-            ev, ee = arith.eval_tree(plan.tree, plan.reads, vals, plan.policy)
+            ev, ee = arith.evaluate_dicts(plan, [vals])[0]
             assert (r.e or None) == ee, (
                 f"sentinel mismatch row={g} got={r.e} want={ee} "
                 f"tree={plan.tree} policy={plan.policy}"

@@ -135,6 +135,138 @@ def test_copy_matches_spark_on_one_dimension(spark, monkeypatch):
     assert got == [1.0, None, 4.0, "txt", 1.0, 5.0]
 
 
+def _grids_copy_vs_spark(db, cube, views, sqls, monkeypatch):
+    """Every view grid and mini-SQL result read from the copy, then from
+    Spark; values must agree and each view names the tier that read it."""
+    from tinyolap_spark import View
+    from tinyolap_spark.sqlq import Query
+
+    def read(tier):
+        cube._local = cube._local_over = None
+        cube._invalidate()
+        grids = []
+        for spec in views:
+            v = View(cube, **spec).refresh()
+            assert v.stats["executed_as"] == tier
+            grids.append([c for r in v.to_dict()["rows"] for c in r["cells"]])
+        for sql in sqls:
+            grids.append([r[-1] for r in Query(db, sql).execute().records])
+        return grids
+
+    got = read("local")
+    with monkeypatch.context() as m:
+        m.setattr(local, "CELL_LIMIT", 0)
+        want = read("spark")
+    cube._local = cube._local_over = None
+    cube._invalidate()
+    bad = [
+        (i, j, g, w)
+        for i, (gs, ws) in enumerate(zip(got, want))
+        for j, (g, w) in enumerate(zip(gs, ws))
+        if not _same(g, w)
+    ]
+    assert not bad and [len(g) for g in got] == [len(w) for w in want], bad[:10]
+    return got
+
+
+def test_views_and_sql_from_copy_match_spark(tiny, monkeypatch):
+    """Weighted, multi-parent and subset axes, empty cells, a dense SQL
+    product and an attribute projection."""
+    db, cube, _rows = tiny
+    views = [
+        dict(filters=[("years", "2021"), ("months", "Year")],
+             rows=[("regions", "*")],
+             columns=[("measures", ["Sales", "Cost", "Profit"])]),
+        dict(filters=[("years", "All years"), ("measures", "Profit")],
+             rows=[("products", "*"), ("regions", ["North", "Total"])],
+             columns=[("months", ["Q1", "summer", "Dec"])]),
+    ]
+    sqls = [
+        "SELECT months, regions, value FROM sales WHERE months=*, "
+        "regions=(North, South), products=best sellers, measures=Profit",
+        "SELECT regions, regions.manager, value FROM sales "
+        "WHERE regions=*, measures=Sales",
+    ]
+    got = _grids_copy_vs_spark(db, cube, views, sqls, monkeypatch)
+    assert sum(v is not None for g in got for v in g) > 100
+
+
+def test_rule_views_and_sql_from_copy_match_spark(spark, monkeypatch):
+    """Grids over compiled, opaque (with and without a sibling rule on the
+    same dimension), expression and ALL_LEVELS rules, a string cell and
+    an empty key."""
+    import math
+
+    from tinyolap_spark import RuleScope
+
+    db = Database("local_rule_grids", spark=spark)
+    keys = _dim(db, "keys", [("g0", ["k0", "k1", "k2"]),
+                             ("g1", ["k3", "k4", "k5"]),
+                             ("All", ["g0", "g1"])])
+    measures = _dim(db, "measures", [("Qty", []), ("Price", []), ("Sales", []),
+                                     ("LogQ", []), ("Note", []), ("Pct", []),
+                                     ("Ratio", [])])
+    cube = db.add_cube("c", [keys, measures])
+    cube.write_rows(
+        [(f"k{i}", "Qty", float(i)) for i in range(5)]
+        + [(f"k{i}", "Price", 1.5 * i) for i in range(5)]
+        + [("k2", "Note", "check"), ("k5", "Price", 2.0)]
+    )
+
+    def sales(c):
+        return c["Qty"] * c["Price"]
+
+    def logq(c):
+        q = c["Qty"]
+        return math.log1p(q) if q is not None else None
+
+    def pct(c):
+        s = c["Sales"]
+        return c["Qty"] / s if s else None
+
+    cube.register_rule(sales, trigger=["measures:Sales"],
+                       scope=RuleScope.BASE_LEVEL, feeder=["measures:Qty"])
+    cube.register_rule(logq, trigger=["measures:LogQ"],
+                       scope=RuleScope.BASE_LEVEL, feeder=["measures:Qty"])
+    cube.register_rule(pct, trigger=["measures:Pct"],
+                       scope=RuleScope.ALL_LEVELS)
+    cube.register_expression_rule("Ratio", "[Price] / [Qty]")
+    row_keys = ["k0", "k2", "k5", "g0", "g1", "All"]
+    views = [dict(rows=[("keys", row_keys)],
+                  columns=[("measures", "*")])]
+    sqls = ["SELECT keys, measures, value FROM c WHERE keys=*, measures=*"]
+    got = _grids_copy_vs_spark(db, cube, views, sqls, monkeypatch)
+    cells = dict(zip(
+        [(k, m.name) for k in row_keys for m in measures.members], got[0]
+    ))
+    assert cells[("g0", "Sales")] == pytest.approx(1 * 1.5 + 2 * 3.0)
+    assert cells[("k5", "Sales")] == "#ERR!"  # no Qty: None * 2.0
+    assert cells[("k2", "Note")] == 0.0  # a grid reads a string cell as 0.0
+    assert cells[("All", "LogQ")] == pytest.approx(
+        sum(math.log1p(i) for i in range(5))
+    )
+
+
+def test_grid_keeps_point_reads_of_base_cells(spark, monkeypatch):
+    """A grid reads a base cell holding a string as 0.0 (aggregate
+    semantics); it must not cache that value for the point read, which
+    returns the string."""
+    from conftest import each_read_tier
+    from tinyolap_spark import View
+
+    for tier in each_read_tier(monkeypatch):
+        db = Database(f"local_grid_cache_{tier}", spark=spark)
+        d1 = _dim(db, "d1", [("All", ["a", "b"])])
+        d2 = _dim(db, "d2", [("Total", ["x", "s"])])
+        cube = db.add_cube("c", [d1, d2])
+        cube.write_rows([("a", "x", 1.0), ("a", "s", "text")])
+        v = View(cube, rows=[("d1", ["a", "All"])],
+                 columns=[("d2", ["x", "s"])]).refresh()
+        assert v.cell_by_names(["a"], ["s"]) == 0.0
+        assert v.cell_by_names(["All"], ["x"]) == 1.0
+        assert cube["a", "s"] == "text"
+
+
 # --------------------------------------------------------------- coherence
 def _coherence_cube(spark, name):
     db = Database(name, spark=spark)

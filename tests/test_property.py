@@ -173,14 +173,16 @@ def test_random_small_batches_hit_fast_paths(spark, seed, read_tier):
     assert (cube._local is not None) == (read_tier == "copy")
 
 
+@pytest.mark.parametrize("opaque", [False, True])
 @pytest.mark.parametrize("seed", [3, 21, 55])
-def test_random_rules_executor_driver_agree(spark, seed):
+def test_random_rules_executor_driver_agree(spark, monkeypatch, seed, opaque):
     """Randomized differential check of the two BASE_LEVEL rule tiers:
     random measures DAG + random single-dimension rule bodies (leaf and
     aggregated reads) must produce identical aggregates from the
-    distributed tier — per address and as one get_many batch — and the
-    driver loop."""
-    from tinyolap_spark import RuleScope
+    batched tier — per address and as one get_many batch — and the
+    driver loop; and the driver copy's answers must equal forced
+    Spark's, tier for tier."""
+    from tinyolap_spark import RuleScope, local
 
     rng = random.Random(seed)
     db = Database(f"rulprop{seed}", spark=spark)
@@ -205,9 +207,11 @@ def test_random_rules_executor_driver_agree(spark, seed):
     read_a, read_b = rng.sample(base_measures, 2)
     agg_read = rng.random() < 0.5
 
-    def rule_fn(c, _a=read_a, _b=read_b, _agg=agg_read):
+    def rule_fn(c, _a=read_a, _b=read_b, _agg=agg_read, _opaque=opaque):
         va = c[_a]
         vb = c["mtot"] if _agg else c[_b]
+        if _opaque:
+            va = float(va or 0.0)  # float() is opaque to the arith compiler
         return (va or 0.0) + 2.0 * (vb or 0.0)
 
     cube.register_rule(
@@ -230,15 +234,37 @@ def test_random_rules_executor_driver_agree(spark, seed):
             assert got == pytest.approx(want), (member.name, path)
     # the same targets as ONE batch: one distributed pass over every
     # requested ancestor (aggregated reads of mtot included)
-    cube._cache.clear()
-    got_all = cube.get_many([(m.name, "derived") for m in targets])
-    path = cube._last_base_rule_path
-    for member, got in zip(targets, got_all):
+    def batch_and_loop():
         cube._cache.clear()
-        want = cube._base_rule_driver_loop(
-            rdef, [member.index, dm.member(read_a).index]
-        )
+        batch = cube.get_many([(m.name, "derived") for m in targets])
+        path = cube._last_base_rule_path
+        loop = []
+        for member in targets:
+            cube._cache.clear()
+            loop.append(cube._base_rule_driver_loop(
+                rdef, [member.index, dm.member(read_a).index]
+            ))
+        return batch, path, loop
+
+    def agree(got, want, label):
         if got is None or want is None:
-            assert got == want, (member.name, path)
+            assert got == want, label
         else:
-            assert got == pytest.approx(want), (member.name, path)
+            assert got == pytest.approx(want), label
+
+    # the same targets as ONE batch: one pass over every requested
+    # ancestor (aggregated reads of mtot included)
+    got_all, path, loop = batch_and_loop()
+    assert cube._local is not None
+    assert path == ("executor" if opaque else "compiled")
+    for member, got, want in zip(targets, got_all, loop):
+        agree(got, want, (member.name, path))
+    with monkeypatch.context() as m:
+        m.setattr(local, "CELL_LIMIT", 0)
+        cube._local = None
+        spark_all, spark_path, spark_loop = batch_and_loop()
+        assert cube._local is None
+    assert spark_path == path
+    for member, a, b, c, d in zip(targets, got_all, spark_all, loop, spark_loop):
+        agree(a, b, (member.name, "batch", path))
+        agree(c, d, (member.name, "driver loop"))

@@ -32,9 +32,9 @@ Neither needs Python at evaluation time.  This module:
    dict-backed cell over a sampled operand grid (two value profiles,
    large/negative profiles to flip comparisons, each operand ``None``,
    each operand ``0.0``, all-``None``, all-zero) and must agree — value
-   AND spreadsheet error sentinel — with a Python mirror of the exact
-   Catalyst columns that will be generated, under one of two null
-   policies:
+   AND spreadsheet error sentinel — with :func:`evaluate`, the numpy
+   twin of the exact Catalyst columns that will be generated, under one
+   of two null policies:
 
    - ``nullprop`` — guarded rules (``if q is not None``): any missing
      operand yields ``None``; with all operands present, division by
@@ -53,7 +53,9 @@ Neither needs Python at evaluation time.  This module:
    (nested ``CASE WHEN`` over per-leaf expressions) over the per-cell
    ``{member_id: value}`` map the rule engine already builds — the whole
    rule batch then evaluates inside whole-stage codegen with no Python,
-   no Arrow transfer, and no probe job.
+   no Arrow transfer, and no probe job.  A cube with a driver copy of
+   its fact evaluates the same tree with :func:`evaluate` over operand
+   columns taken from the copy.
 """
 
 from __future__ import annotations
@@ -62,6 +64,7 @@ import math
 from dataclasses import dataclass
 from typing import Optional, Sequence
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -349,125 +352,6 @@ class _DictCell:
         raise _VerifyEscape(f"attribute access .{name}")
 
 
-# ---------------------------------------------------------------------------
-# python mirror of the generated columns (verification oracle)
-# ---------------------------------------------------------------------------
-#
-# Both evaluators return ``(value, err)`` with at most one non-None and
-# short-circuit on the FIRST error in Python evaluation order — exactly
-# the ``coalesce`` order the Catalyst build emits.
-
-
-def _eval_leaf_raw(node, vals):
-    """``nullerr`` leaf semantics (lazy path, all errors live)."""
-    kind = node[0]
-    if kind == "read":
-        v = vals.get(node[1])
-        return (float(v) if isinstance(v, (int, float)) else None), None
-    if kind == "const":
-        return node[1], None
-    if kind == "none":
-        return None, None
-    if kind in _UNOPS:
-        v, e = _eval_leaf_raw(node[1], vals)
-        if e:
-            return None, e
-        if v is None:
-            return None, _ERR
-        return (-v if kind == "neg" else abs(v)), None
-    l, le = _eval_leaf_raw(node[1], vals)
-    if le:
-        return None, le
-    r, re_ = _eval_leaf_raw(node[2], vals)
-    if re_:
-        return None, re_
-    if l is None or r is None:
-        return None, _ERR
-    if kind == "add":
-        return l + r, None
-    if kind == "sub":
-        return l - r, None
-    if kind == "mul":
-        return l * r, None
-    if r == 0.0:
-        return None, _DIV0
-    return l / r, None
-
-
-def _eval_leaf_guarded(node, vals):
-    """``nullprop`` leaf semantics (all reads known present): only
-    division by zero errs."""
-    kind = node[0]
-    if kind == "read":
-        v = vals.get(node[1])
-        return (float(v) if isinstance(v, (int, float)) else None), None
-    if kind == "const":
-        return node[1], None
-    if kind == "none":
-        return None, None
-    if kind in _UNOPS:
-        v, e = _eval_leaf_guarded(node[1], vals)
-        if e:
-            return None, e
-        if v is None:
-            return None, None
-        return (-v if kind == "neg" else abs(v)), None
-    l, le = _eval_leaf_guarded(node[1], vals)
-    if le:
-        return None, le
-    r, re_ = _eval_leaf_guarded(node[2], vals)
-    if re_:
-        return None, re_
-    if kind == "div":
-        if r == 0.0:
-            return None, _DIV0
-        if l is None or r is None:
-            return None, None
-        return l / r, None
-    if l is None or r is None:
-        return None, None
-    if kind == "add":
-        return l + r, None
-    return (l - r if kind == "sub" else l * r), None
-
-
-def _cmp_py(op, l, r) -> bool:
-    if op == "lt":
-        return l < r
-    if op == "le":
-        return l <= r
-    if op == "gt":
-        return l > r
-    if op == "ge":
-        return l >= r
-    if op == "eq":
-        return l == r
-    return l != r
-
-
-def _eval_cond(bnode, vals, policy):
-    """Evaluate a bool node → (outcome, err)."""
-    leaf = _eval_leaf_guarded if policy == "nullprop" else _eval_leaf_raw
-    if bnode[0] == "truthy":
-        v, e = leaf(bnode[1], vals)
-        if e:
-            return None, e
-        # Python truthiness: bool(None) is False, bool(0.0) is False
-        return (v is not None and v != 0.0), None
-    _, op, ln, rn = bnode
-    l, le = leaf(ln, vals)
-    if le:
-        return None, le
-    r, re_ = leaf(rn, vals)
-    if re_:
-        return None, re_
-    if l is None or r is None:
-        # Python: comparison with None raises TypeError -> #ERR!
-        # (nullprop never reaches here: the any-null guard fired already)
-        return None, _ERR
-    return _cmp_py(op, l, r), None
-
-
 def _tree_reads(node, acc: list) -> None:
     kind = node[0]
     if kind == "read":
@@ -487,27 +371,17 @@ def _tree_reads(node, acc: list) -> None:
         _tree_reads(node[2], acc)
 
 
-def eval_tree(
-    node, reads: Sequence[int], vals: dict, policy: str
-) -> tuple[Optional[float], Optional[str]]:
-    """Evaluate the (decision) tree exactly as the generated columns will.
-    Returns ``(value, err)`` — at most one is non-None."""
-    if policy == "nullprop" and any(
-        not isinstance(vals.get(m), (int, float)) for m in reads
-    ):
-        return None, None
-    while node[0] == "if":
-        cond, err = _eval_cond(node[1], vals, policy)
-        if err:
-            return None, err
-        node = node[2] if cond else node[3]
-    leaf = _eval_leaf_guarded if policy == "nullprop" else _eval_leaf_raw
-    return leaf(node, vals)
-
-
 # ---------------------------------------------------------------------------
-# catalyst compilation
+# numpy evaluation of the generated columns
 # ---------------------------------------------------------------------------
+#
+# Node for node the numpy twin of the Catalyst build below.  It is the
+# oracle ``_verify`` checks the Python body against, and the evaluator of
+# the cube's local rule tier.  Every node yields ``(value, null, err)``
+# arrays: float64 values, a null mask and int8 codes into :data:`ERRORS`
+# (0: no error).  Errors short-circuit in Python evaluation order, the
+# ``coalesce`` order the Catalyst build emits, and an erring row's value
+# is null.
 
 
 @dataclass(frozen=True)
@@ -515,6 +389,135 @@ class ArithPlan:
     tree: tuple
     reads: tuple  # distinct member ids, in first-read order
     policy: str  # "nullprop" | "nullerr"
+
+
+#: error code -> spreadsheet sentinel
+ERRORS = (None, _DIV0, _ERR)
+_DIV0_CODE, _ERR_CODE = 1, 2
+
+_NP_CMP = {
+    "lt": np.less, "le": np.less_equal, "gt": np.greater,
+    "ge": np.greater_equal, "eq": np.equal, "ne": np.not_equal,
+}
+
+
+def _first_err(*errs) -> np.ndarray:
+    """``coalesce`` of error-code arrays: the first non-zero code."""
+    out = np.asarray(errs[-1], dtype=np.int8)
+    for e in reversed(errs[:-1]):
+        out = np.where(e != 0, e, out).astype(np.int8)
+    return out
+
+
+def _np_leaf(node, operand, n, nullerr):
+    kind = node[0]
+    if kind == "read":
+        v, null = operand(node[1])
+        return v, null, np.zeros(n, np.int8)
+    if kind == "const":
+        return np.full(n, float(node[1])), np.zeros(n, bool), np.zeros(n, np.int8)
+    if kind == "none":
+        return np.zeros(n), np.ones(n, bool), np.zeros(n, np.int8)
+    if kind in _UNOPS:
+        v, null, e = _np_leaf(node[1], operand, n, nullerr)
+        if nullerr:
+            e = _first_err(e, np.where(null, _ERR_CODE, 0))
+        out = -v if kind == "neg" else np.abs(v)
+        return out, null | (e != 0), e
+    l, lnull, le = _np_leaf(node[1], operand, n, nullerr)
+    r, rnull, re_ = _np_leaf(node[2], operand, n, nullerr)
+    anynull = lnull | rnull
+    zero = ~rnull & (r == 0)
+    op = np.zeros(n, np.int8)
+    if kind == "div":
+        op = np.where(zero, _DIV0_CODE, op)
+    if nullerr:
+        op = np.where(anynull, _ERR_CODE, op)
+    e = _first_err(le, re_, op)
+    with np.errstate(all="ignore"):
+        if kind == "add":
+            out = l + r
+        elif kind == "sub":
+            out = l - r
+        elif kind == "mul":
+            out = l * r
+        else:
+            out = l / np.where(zero, 1.0, r)
+    null = anynull | (e != 0)
+    if kind == "div":
+        null |= zero
+    return out, null, e
+
+
+def _np_cond(bnode, operand, n, nullerr):
+    """Bool node -> ``(condition, err)``; a null operand is False."""
+    if bnode[0] == "truthy":
+        v, null, e = _np_leaf(bnode[1], operand, n, nullerr)
+        # bool(None) is False, bool(0.0) is False, bool(nan) is True
+        return ~null & (v != 0), e
+    _, op, ln, rn = bnode
+    l, lnull, le = _np_leaf(ln, operand, n, nullerr)
+    r, rnull, re_ = _np_leaf(rn, operand, n, nullerr)
+    anynull = lnull | rnull
+    # Python: comparison with None raises TypeError -> #ERR! (nullprop
+    # never gets here with a null: the any-null guard fired already)
+    cmp_err = np.where(anynull & nullerr, _ERR_CODE, 0)
+    with np.errstate(invalid="ignore"):
+        # numpy compares NaN as Python does: False except !=
+        raw = _NP_CMP[op](l, r)
+    return raw & ~anynull, _first_err(le, re_, cmp_err)
+
+
+def _np_tree(node, operand, n, nullerr):
+    if node[0] != "if":
+        return _np_leaf(node, operand, n, nullerr)
+    cond, ce = _np_cond(node[1], operand, n, nullerr)
+    tv, tnull, te = _np_tree(node[2], operand, n, nullerr)
+    ev, enull, ee = _np_tree(node[3], operand, n, nullerr)
+    e = _first_err(ce, np.where(cond, te, ee))
+    return np.where(cond, tv, ev), np.where(cond, tnull, enull) | (e != 0), e
+
+
+def evaluate(
+    plan: ArithPlan, operand, n: int
+) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
+    """Evaluate ``plan`` at ``n`` points, as the columns of
+    :func:`to_columns` evaluate row by row.  ``operand(m)`` returns
+    ``(values, null)``, the float64 values and null mask of member ``m``
+    at every point.  Returns ``(value, null, err)``: err codes index
+    :data:`ERRORS`, and a point that errs is null."""
+    v, null, e = _np_tree(plan.tree, operand, n, plan.policy == "nullerr")
+    if plan.policy == "nullprop" and plan.reads:
+        anynull = np.logical_or.reduce([operand(m)[1] for m in plan.reads])
+        null = null | anynull
+        e = np.where(anynull, 0, e).astype(np.int8)
+    return v, null, e
+
+
+def evaluate_dicts(
+    plan: ArithPlan, points: "Sequence[dict]"
+) -> "list[tuple[Optional[float], Optional[str]]]":
+    """:func:`evaluate` over ``{member_id: value}`` dicts (a missing or
+    non-numeric value is null); ``(value, err)`` per point, at most one
+    of them non-None."""
+    cols = {}
+    for m in plan.reads:
+        raw = [p.get(m) for p in points]
+        null = np.array([not isinstance(x, (int, float)) for x in raw], bool)
+        cols[m] = (
+            np.array([0.0 if nl else float(x) for x, nl in zip(raw, null)]),
+            null,
+        )
+    v, null, e = evaluate(plan, cols.__getitem__, len(points))
+    return [
+        (None if nl else x, ERRORS[c])
+        for x, nl, c in zip(v.tolist(), null.tolist(), e.tolist())
+    ]
+
+
+# ---------------------------------------------------------------------------
+# catalyst compilation
+# ---------------------------------------------------------------------------
 
 
 def _null_str() -> Column:
@@ -676,9 +679,11 @@ def _values_agree(a: Optional[float], b: Optional[float]) -> bool:
     return math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-12)
 
 
-def _verify(cube, rdef, p, trigger_midx, tree, reads, policy) -> bool:
+def _verify(cube, rdef, p, trigger_midx, plan: ArithPlan) -> bool:
     import itertools
     import random as _random
+
+    reads = plan.reads
 
     def _profile(vals_tuple):
         # cycle: rules may read MORE operands than the profile length —
@@ -730,11 +735,10 @@ def _verify(cube, rdef, p, trigger_midx, tree, reads, policy) -> bool:
                 )
     samples.append({m: None for m in reads})
     samples.append({m: 0.0 for m in reads})
-    for vals in samples:
+    for vals, got in zip(samples, evaluate_dicts(plan, samples)):
         expected = _normalize_expected(cube, rdef, p, trigger_midx, vals)
         if expected == "reject":
             return False
-        got = eval_tree(tree, reads, vals, policy)
         if expected[1] != got[1] or not _values_agree(expected[0], got[0]):
             return False
     return True
@@ -821,8 +825,9 @@ def _try_compile(cube, rdef, p, trigger_midx) -> Optional[ArithPlan]:
     _tree_reads(tree, reads)
     distinct = tuple(dict.fromkeys(reads))
     for policy in ("nullprop", "nullerr"):
-        if _verify(cube, rdef, p, trigger_midx, tree, distinct, policy):
-            return ArithPlan(tree=tree, reads=distinct, policy=policy)
+        plan = ArithPlan(tree=tree, reads=distinct, policy=policy)
+        if _verify(cube, rdef, p, trigger_midx, plan):
+            return plan
     return None
 
 

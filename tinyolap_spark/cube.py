@@ -11,13 +11,16 @@ the aggregation loop skips non-float values).
 Read path (parity with reference ``cube.py:282-497``, re-expressed
 set-at-a-time):
 
-- point reads are *batched*: ``cube.get_many(addresses)`` answers any mix
-  of base and aggregated addresses in at most TWO Spark jobs (one exact
-  equality join for base cells, one closure-rollup join for aggregates);
+- a fact of at most ``local.CELL_LIMIT`` cells is copied to the driver
+  (:mod:`tinyolap_spark.local`); cell reads, BASE_LEVEL rule aggregates
+  and whole grids (views, mini-SQL) over such a cube run no Spark job;
+- on any other cube point reads are *batched*: ``cube.get_many(addresses)``
+  answers any mix of base and aggregated addresses in at most TWO Spark
+  jobs (one exact equality join for base cells, one closure-rollup join
+  for aggregates), and a whole grid computes in ONE job via
+  :func:`tinyolap_spark.engine.aggregate_grid`;
 - a driver-side cell cache (bolt -> value, invalidated on write — reference
-  ``cube.py:347-349,510-511``) makes repeated interactive reads free;
-- whole grids (views) compute in ONE job via
-  :func:`tinyolap_spark.engine.aggregate_grid`.
+  ``cube.py:347-349,510-511``) makes repeated interactive reads free.
 
 Write path: point writes buffer in a driver dict and flush as one merge
 (anti-join + union) — the Spark analogue of the reference's per-cell
@@ -32,6 +35,7 @@ import itertools
 from collections import Counter
 from typing import Any, Callable, Iterable, Optional, Sequence, Union
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -59,6 +63,13 @@ from .rules import (
 )
 
 MAX_DIMS_PER_CUBE = 32  # reference database.py:35-37
+
+# every scope a cell read dispatches on (COMMAND rules never fire on reads)
+_RULE_SCOPES = (
+    RuleScope.ALL_LEVELS,
+    RuleScope.AGGREGATION_LEVEL,
+    RuleScope.BASE_LEVEL,
+)
 
 class _NonLocalRead(Exception):
     """A slice-local rule cell was asked for data outside its slice."""
@@ -515,8 +526,8 @@ class Cube:
         self.rules = RuleRegistry()
         self.caching = True
         self._cache: dict[tuple[int, ...], Any] = {}
-        # which path evaluated the last BASE_LEVEL aggregate rule
-        # ("executor" | "driver") — observability + tests
+        # which evaluator answered the last BASE_LEVEL aggregate rule read
+        # ("compiled" | "executor" | "driver") — observability + tests
         self._last_base_rule_path: Optional[str] = None
         # database-level undo/redo (set by Database.add_cube)
         self._history = None
@@ -529,7 +540,8 @@ class Cube:
         self.counter_aggregations = 0
         self.counter_rule_requests = 0
         self.counter_cache_hits = 0
-        # cells answered by the driver copy, and how often it was built
+        # cells (stored, grid and aggregated rule cells) answered by the
+        # driver copy, and how often it was built
         self.counter_local_cells = 0
         self.counter_local_builds = 0
         # aggregate navigation (add_summary): materialized summary tables
@@ -1288,7 +1300,8 @@ class Cube:
         """Answer N point reads in one batch.  Base and aggregated cells
         come from the driver copy of a small fact (no Spark job), else
         from at most two Spark jobs (one base-cell join, one rollup).
-        Rule cells add their own evaluation, which may run more jobs."""
+        Rule cells evaluate in batches per rule: from the copy with no
+        Spark job, else in Spark jobs of their own."""
         idxs = [self._resolve_address(a)[0] for a in addresses]
         self._prefetch(idxs)
         return [self._get_idx(i) for i in idxs]
@@ -1332,21 +1345,26 @@ class Cube:
         return lf.aggregate(self.dimensions, addresses)
 
     def _prefetch(self, idx_addresses: Sequence[tuple[int, ...]]) -> None:
-        """Batch-compute values for addresses not in cache / not rule-covered."""
+        """Batch-compute the stored cells among ``idx_addresses`` that are
+        not cached, together with the operands of expression-rule cells
+        among them (transitively), then warm the cache for rule cells."""
         self._flush()
         base: dict[int, tuple[int, ...]] = {}
         aggs: dict[int, tuple[int, ...]] = {}
-        for i, addr in enumerate(idx_addresses):
-            if addr in self._cache:
+        todo, seen = list(idx_addresses), set()
+        for addr in todo:  # grows by the operands of expression rules
+            if addr in seen or addr in self._cache:
                 continue
-            if self.rules.match(
-                addr, (RuleScope.ALL_LEVELS, RuleScope.AGGREGATION_LEVEL, RuleScope.BASE_LEVEL)
-            ):
+            seen.add(addr)
+            rdef = self.rules.match(addr, _RULE_SCOPES)
+            if rdef is not None:
+                if rdef.expression is not None:
+                    todo.extend(
+                        self._expression_operand_addrs(rdef, addr).values()
+                    )
                 continue  # rule cells evaluate lazily (may recurse)
-            if self._super_level(addr) == 0:
-                base[i] = addr
-            else:
-                aggs[i] = addr
+            batch = base if self._super_level(addr) == 0 else aggs
+            batch[len(seen)] = addr
         for batch, read in (
             (base, self._base_values), (aggs, self._aggregate_values)
         ):
@@ -1357,6 +1375,50 @@ class Cube:
         if self.caching:
             self._prefetch_agg_rule_cells(idx_addresses)
         self._prefetch_rule_reads(idx_addresses)
+
+    def _read_grid(
+        self, members: "Sequence[Sequence[int]]"
+    ) -> "tuple[dict[tuple[int, ...], Any], str]":
+        """Every cell of the cartesian product of ``members`` (a member id
+        list per dimension), and the tier that read its stored cells:
+        ``"local"`` (`LocalFact.aggregate` over the driver copy) or
+        ``"spark"`` (one `engine.aggregate_grid` job).  A stored cell
+        reads with aggregate semantics (a base cell holding only a string
+        reads 0.0); rule cells evaluate as in `get_many`."""
+        self._flush()
+        addrs = list(dict.fromkeys(itertools.product(*members)))
+        ruled = [
+            a for a in addrs if self.rules.match(a, _RULE_SCOPES)
+        ] if len(self.rules) else []
+        skip = set(ruled)
+        plain = [a for a in addrs if a not in skip]
+        axes = {
+            c: sorted({int(i) for i in ids})
+            for c, ids in zip(self._cols, members)
+        }
+        lf = self._local_copy()
+        if lf is None:
+            grid = engine.aggregate_grid(
+                self._rollup_fact(axes), self.spark, self._dims_spec(),
+                axes, self._cols,
+            ).collect()
+            got = {tuple(r[c] for c in self._cols): r["value"] for r in grid}
+            values = {a: got.get(a) for a in plain}
+        else:
+            self._log_request(axes)
+            self.counter_local_cells += len(plain)
+            res = lf.aggregate(self.dimensions, dict(enumerate(plain)))
+            values = {a: res[i] for i, a in enumerate(plain)}
+        if self.caching:
+            # a base cell's grid value is not its point-read value (a
+            # string reads 0.0 here), so only aggregates are cached
+            self._cache.update(
+                (a, v) for a, v in values.items() if self._super_level(a)
+            )
+        if ruled:
+            self._prefetch(ruled)
+            values.update((a, self._get_idx(a)) for a in ruled)
+        return values, "spark" if lf is None else "local"
 
     def _prefetch_agg_rule_cells(
         self, idx_addresses: Sequence[tuple[int, ...]]
@@ -1613,8 +1675,8 @@ class Cube:
     def _aggregate_base_rule_many(
         self, rdef: RuleDef, idx_addresses: "list[tuple[int, ...]]"
     ) -> "Optional[dict[tuple[int, ...], Any]]":
-        """Distributed evaluation of aggregated addresses sharing one
-        BASE_LEVEL rule — ONE rule-evaluation query for the batch (a view
+        """Batched evaluation of aggregated addresses sharing one
+        BASE_LEVEL rule — ONE rule-evaluation pass for the batch (a view
         grid, a get_many batch; a single read is a batch of one).  Returns
         {address: value}, or ``None`` when the rule is ineligible and the
         caller must use `_base_rule_driver_loop`.  Sets
@@ -1624,16 +1686,17 @@ class Cube:
         only members of p (compiled read set, else a one-row probe), and no
         other rule can fire on a cell the slice holds.
 
-        Plan: the fact slice (dim p unfiltered) closure-fans-out the rest
-        dims to every requested ancestor (`_joined_rollup` with the UNION
-        of requested ids), groups per (rest-leaf, ancestor-combo), evaluates
-        the rule once per group holding a feeder row, and a final hash
-        aggregate sums the weighted results per ancestor-combo.  A compiled
-        rule evaluates as Catalyst expressions over its read members pivoted
-        into columns ("compiled"); any other in one ``mapInPandas`` pass
-        over a per-group {p-member: value} map ("executor").  When a
-        trigger, feeder or read member of p is aggregated, p is expanded
-        through its closure so each group also carries rolled-up values.
+        Plan: the fact rows under the requested addresses (dim p
+        unfiltered) group per rest-leaf, the address without p; the rule
+        evaluates once per group holding a feeder row, over the group's
+        {p-member: value} slice, and the results sum, weighted, per
+        requested ancestor combo.  A compiled rule evaluates its `arith`
+        tree over the read members' values ("compiled"); any other rule
+        runs per group in Python ("executor").  When a trigger, feeder or
+        read member of p is aggregated, a group also carries the rolled-up
+        values of p's ancestors.  A cube with a driver copy of its fact
+        runs all of it on the driver (`_base_rule_local`, no Spark job);
+        any other runs one Spark query (`_base_rule_spark`).
         """
         self._last_base_rule_path = "driver"  # a decline: the loop answers
         self._flush()
@@ -1644,31 +1707,36 @@ class Cube:
         if len(positions) != 1:
             return None
         p = next(iter(positions))
-        pdim = self.dimensions[p]
         trigger_midx = dict(pattern)[p]
         feeder_midx = dict(rdef.feeder_idx_pattern or pattern)[p]
         qaddrs = [self._rule_query_addr(rdef, a) for a in idx_addresses]
+        lf = self._local_copy()
 
         def sample_addr():
-            # probe over the UNION of requested addresses: ONE rollup +
-            # limit(1) job instead of up-to-N per-address probe jobs
-            # (VERDICT r4 #2 / ADVICE r4).  Any base row under any
-            # requested address is a valid probe point — eligibility only
-            # depends on the rule's read set.
-            requested_full = {
-                c: sorted({int(qa[i]) for qa in qaddrs})
-                for i, c in enumerate(self._cols)
-            }
-            sdf, _ = engine._joined_rollup(
-                self._fact, self.spark, self._dims_spec(), requested_full
-            )
-            sample = sdf.select(*self._cols).limit(1).collect()
-            if not sample:
+            # any base row under any requested address is a valid probe
+            # point — eligibility only depends on the rule's read set — so
+            # probe the per-dimension UNION of them once, not per address
+            union = [
+                sorted({int(qa[i]) for qa in qaddrs})
+                for i in range(len(self._cols))
+            ]
+            if lf is not None:
+                hit = np.flatnonzero(
+                    lf.under(self.dimensions, dict(enumerate(union)))
+                )
+                row = lf.ids[:, hit[0]].tolist() if len(hit) else None
+            else:
+                sdf, _ = engine._joined_rollup(
+                    self._fact, self.spark, self._dims_spec(),
+                    dict(zip(self._cols, union)),
+                )
+                sample = sdf.select(*self._cols).limit(1).collect()
+                row = list(sample[0]) if sample else None
+            if row is None:
                 return None
-            trigger_idx = [sample[0][c] for c in self._cols]
             for pos, midx in pattern:
-                trigger_idx[pos] = midx
-            return tuple(trigger_idx)
+                row[pos] = midx
+            return tuple(row)
 
         read_set = self._rule_read_set(rdef, p, sample_addr)
         if read_set is None:
@@ -1717,6 +1785,215 @@ class Cube:
                         break
                 if could_match:
                     return None
+        pdim = self.dimensions[p]
+        # a read of an aggregated member of p needs p's closure: each
+        # group then also carries the rolled-up values of p's ancestors
+        p_leaves = (
+            None
+            if any(pdim._defs[m].level != 0 for m in read_midxs)
+            else frozenset(i for i, d in pdim._defs.items() if d.level == 0)
+        )
+        run = (
+            self._slice_runner(rdef, p, trigger_midx, feeder_midx, p_leaves)
+            if plan is None
+            else None
+        )
+        if lf is not None:
+            return self._base_rule_local(
+                lf, plan, run, p, feeder_midx, p_leaves, idx_addresses, qaddrs
+            )
+        return self._base_rule_spark(
+            plan, run, p, feeder_midx, p_leaves, idx_addresses, qaddrs
+        )
+
+    def _slice_runner(
+        self, rdef: RuleDef, p: int, trigger_midx: int, feeder_midx: int,
+        p_leaves: "Optional[frozenset]",
+    ) -> Callable:
+        """The opaque rule as a pandas batch function, run by
+        ``mapInPandas`` or directly on the driver.  Each input row is one
+        rest-leaf group: its rest ids, ``__vals`` ({p-member: value}) and
+        ``__w``; each output row holds the input's ``__a_*`` columns (when
+        present), ``v``, ``w`` and ``err``, in input order.  A read that
+        leaves the slice errs ``"__nonlocal__"``.  The function must not
+        capture the cube: executors unpickle it."""
+        p_col = self._cols[p]
+        rest_cols = [c for c in self._cols if c != p_col]
+        # per-dim name->idx resolution and idx->name maps (small
+        # metadata), matching Cell._resolve_modifier
+        dim_lookups = [
+            ({k: v for k, v in dim._lookup.items()}, dim.name.lower())
+            for dim in self.dimensions
+        ]
+        id_names = [
+            {d.idx: d.name for d in dim._iter_defs()}
+            for dim in self.dimensions
+        ]
+        fn = rdef.function
+        n_dims = len(self._cols)
+
+        def run(batches):
+            import pandas as pd
+
+            from tinyolap_spark.rules import CONTINUE as _CONT
+            from tinyolap_spark.rules import map_rule_error as _map_err
+
+            for pdf in batches:
+                anc_cols = [c for c in pdf.columns if c.startswith("__a_")]
+                out = {c: [] for c in anc_cols}
+                out_v, out_w, out_err = [], [], []
+                for row in pdf.to_dict("records"):
+                    vals = row["__vals"] or {}
+                    rest = [row[c] for c in rest_cols]
+                    cell = _SliceCell(
+                        p, rest_cols, rest, trigger_midx, vals,
+                        dim_lookups, id_names, n_dims, p_col, p_leaves,
+                    )
+                    err = None
+                    v = None
+                    try:
+                        v = fn(cell)
+                    except _NonLocalRead:
+                        err = "__nonlocal__"
+                    except Exception as exc:  # noqa: BLE001
+                        err = _map_err(exc)
+                    if err is None:
+                        if v is _CONT:
+                            v = vals.get(feeder_midx)
+                        if isinstance(v, bool) or not isinstance(
+                            v, (int, float)
+                        ):
+                            v = None
+                    for c in anc_cols:
+                        out[c].append(row[c])
+                    out_v.append(float(v) if v is not None else None)
+                    out_w.append(row["__w"])
+                    out_err.append(err)
+                out_pdf = pd.DataFrame(out)
+                out_pdf["v"] = pd.Series(out_v, dtype="float64")
+                out_pdf["w"] = pd.Series(out_w, dtype="float64")
+                out_pdf["err"] = pd.Series(out_err, dtype="object")
+                yield out_pdf
+
+        return run
+
+    def _base_rule_local(
+        self, lf: "local.LocalFact", plan: "Optional[arith.ArithPlan]",
+        run: Optional[Callable], p: int, feeder_midx: int,
+        p_leaves: "Optional[frozenset]", idx_addresses, qaddrs,
+    ) -> "Optional[dict[tuple[int, ...], Any]]":
+        """`_aggregate_base_rule_many` over the driver copy: numpy for a
+        compiled plan, ``run`` on a pandas frame for an opaque rule, and
+        the per-group results roll up with `LocalFact.aggregate`."""
+        import pandas as pd
+
+        dims = self.dimensions
+        rest = [i for i in range(len(dims)) if i != p]
+        keep = np.flatnonzero(lf.under(
+            dims, {i: sorted({int(qa[i]) for qa in qaddrs}) for i in rest}
+        ))
+        pid = lf.ids[p][keep]
+        valued = ~lf.null[keep]
+        values = lf.values[keep]
+        # group the rows per rest-leaf: their code without dimension p
+        _, first, group = np.unique(
+            lf.codes[keep] - pid.astype(np.int64) * lf.strides[p],
+            return_index=True, return_inverse=True,
+        )
+        n_groups = len(first)
+        closure = lf._closure(dims[p])
+        radix = int(lf.radix[p])
+
+        def slice_col(m):
+            """Per group: the weighted sum of the rows under p-member
+            ``m``, whether it has such a row, whether one holds a number
+            (the sum is null without)."""
+            mem, _, w = closure.pairs([m], radix)
+            weight = np.zeros(radix)
+            weight[mem] = w
+            under = np.zeros(radix, dtype=bool)
+            under[mem] = True
+            rows = under[pid]
+            num = rows & valued
+            total = np.bincount(
+                group[num], weights=values[num] * weight[pid[num]],
+                minlength=n_groups,
+            )
+            has = np.bincount(group[rows], minlength=n_groups) > 0
+            present = np.bincount(group[num], minlength=n_groups) > 0
+            return total, has, present
+
+        fed = np.flatnonzero(slice_col(feeder_midx)[1])
+        gids = lf.ids[:, keep[first[fed]]]  # row p is ignored below
+        if plan is not None:
+            cols = {}
+            for m in plan.reads:
+                total, _, present = slice_col(m)
+                cols[m] = (total[fed], ~present[fed])
+            v, null, codes = arith.evaluate(plan, cols.__getitem__, len(fed))
+            err = np.asarray(arith.ERRORS, dtype=object)[codes]
+            path = "compiled"
+        else:
+            members = (
+                np.unique(pid) if p_leaves is not None else closure.anc
+            )
+            maps: list[dict] = [{} for _ in range(len(fed))]
+            for m in members.tolist():
+                total, has, present = slice_col(m)
+                t, ok = total[fed].tolist(), present[fed].tolist()
+                for j in np.flatnonzero(has[fed]).tolist():
+                    maps[j][m] = t[j] if ok[j] else None
+            frame = pd.DataFrame(
+                {self._cols[i]: gids[i] for i in rest}
+            )
+            frame["__vals"] = maps
+            frame["__w"] = 1.0
+            out = next(run([frame]))
+            v, null = out["v"].to_numpy(), out["v"].isna().to_numpy()
+            err = out["err"].to_numpy()
+            path = "executor"
+        # roll the group results up to the requested ancestor combos; an
+        # error anywhere under a combo wins (the smallest sentinel, as the
+        # Spark tier's min), a combo with no group is empty
+        reqs = {
+            j: [None if i == p else qa[i] for i in range(len(dims))]
+            for j, qa in enumerate(qaddrs)
+        }
+        res: dict[int, Any] = lf.aggregate(
+            dims, reqs, rows=(gids, np.where(null, 0.0, v))
+        )
+        flagged: dict[int, str] = {}
+        for e in sorted({e for e in err.tolist() if e is not None}):
+            mask = err == e
+            hit = lf.aggregate(
+                dims, reqs, rows=(gids[:, mask], np.ones(int(mask.sum())))
+            )
+            hit = [j for j, h in hit.items() if h is not None]
+            if e == "__nonlocal__" and hit:
+                return None  # a runtime read escaped the slice: fall back
+            for j in hit:
+                flagged.setdefault(j, e)
+        res.update(flagged)
+        self._last_base_rule_path = path
+        self.counter_local_cells += len(idx_addresses)
+        return {tuple(a): res[j] for j, a in enumerate(idx_addresses)}
+
+    def _base_rule_spark(
+        self, plan: "Optional[arith.ArithPlan]", run: Optional[Callable],
+        p: int, feeder_midx: int, p_leaves: "Optional[frozenset]",
+        idx_addresses, qaddrs,
+    ) -> "Optional[dict[tuple[int, ...], Any]]":
+        """`_aggregate_base_rule_many` as one Spark query: the fact slice
+        closure-fans-out the rest dims to every requested ancestor
+        (`_joined_rollup` with the UNION of requested ids), groups per
+        (rest-leaf, ancestor-combo), evaluates the rule once per group
+        holding a feeder row, and a final hash aggregate sums the weighted
+        results per ancestor-combo.  A compiled rule evaluates as Catalyst
+        expressions over its read members pivoted into columns; any other
+        in one ``mapInPandas`` pass over a per-group {p-member: value}
+        map."""
+        pdim = self.dimensions[p]
+        needs_closure = p_leaves is None
         p_col = self._cols[p]
         rest_cols = [c for c in self._cols if c != p_col]
         rest_pos = [i for i, c in enumerate(self._cols) if c != p_col]
@@ -1755,9 +2032,6 @@ class Cube:
             if f"__w_{c}" in df.columns:
                 wprod = wprod * F.col(f"__w_{c}")
         keys = [F.col(c) for c in rest_cols + anc_cols]
-        needs_closure = any(
-            pdim._defs[m].level != 0 for m in read_midxs
-        )
         if needs_closure:
             # Expand dim p through its closure (broadcast join): each row
             # also lands on every ancestor of its p-member, weighted, so a
@@ -1836,7 +2110,6 @@ class Cube:
                 ).alias("__vals"),
                 F.first(F.col("__w0")).alias("__w"),
             )
-            p_leaves = None
         else:
             # leaf-only map, ONE shuffle: a runtime read of an aggregated
             # member raises _NonLocalRead in _SliceCell via p_leaves ->
@@ -1847,64 +2120,6 @@ class Cube:
                 ).alias("__vals"),
                 F.first(wprod).alias("__w"),
             )
-            p_leaves = frozenset(
-                i for i, d in pdim._defs.items() if d.level == 0
-            )
-        # context shipped to executors: per-dim name->idx resolution and
-        # idx->name maps (small metadata), matching Cell._resolve_modifier
-        dim_lookups = [
-            ({k: v for k, v in dim._lookup.items()}, dim.name.lower())
-            for dim in self.dimensions
-        ]
-        id_names = [
-            {d.idx: d.name for d in dim._iter_defs()}
-            for dim in self.dimensions
-        ]
-        fn = rdef.function
-        n_dims = len(self._cols)
-
-        def run(batches):
-            import pandas as pd
-
-            from tinyolap_spark.rules import CONTINUE as _CONT
-            from tinyolap_spark.rules import map_rule_error as _map_err
-
-            for pdf in batches:
-                out = {c: [] for c in anc_cols}
-                out_v, out_w, out_err = [], [], []
-                for row in pdf.to_dict("records"):
-                    vals = row["__vals"] or {}
-                    rest = [row[c] for c in rest_cols]
-                    cell = _SliceCell(
-                        p, rest_cols, rest, trigger_midx, vals,
-                        dim_lookups, id_names, n_dims, p_col, p_leaves,
-                    )
-                    err = None
-                    v = None
-                    try:
-                        v = fn(cell)
-                    except _NonLocalRead:
-                        err = "__nonlocal__"
-                    except Exception as exc:  # noqa: BLE001
-                        err = _map_err(exc)
-                    if err is None:
-                        if v is _CONT:
-                            v = vals.get(feeder_midx)
-                        if isinstance(v, bool) or not isinstance(
-                            v, (int, float)
-                        ):
-                            v = None
-                    for c in anc_cols:
-                        out[c].append(row[c])
-                    out_v.append(float(v) if v is not None else None)
-                    out_w.append(row["__w"])
-                    out_err.append(err)
-                out_pdf = pd.DataFrame(out)
-                out_pdf["v"] = pd.Series(out_v, dtype="float64")
-                out_pdf["w"] = pd.Series(out_w, dtype="float64")
-                out_pdf["err"] = pd.Series(out_err, dtype="object")
-                yield out_pdf
-
         evald = grouped.where(
             F.map_contains_key(F.col("__vals"), F.lit(int(feeder_midx)))
         )
@@ -1971,26 +2186,38 @@ class Cube:
     def _base_rule_driver_loop(
         self, rdef: RuleDef, query_addr: list[int]
     ) -> Any:
-        """Driver-side evaluation: collects the feeder slice and calls the
-        rule per row with a full cube-backed Cell (supports arbitrary
-        cube re-entry, nested rules, multi-dimension reads).
+        """Driver-side evaluation: takes the feeder slice (from the driver
+        copy, else one Spark collect) and calls the rule per row with a
+        full cube-backed Cell (supports arbitrary cube re-entry, nested
+        rules, multi-dimension reads).
 
-        The collect is budgeted: ``limit(budget + 1)`` bounds driver
-        memory up-front (no extra count job) and a slice above budget
-        raises instead of silently materializing."""
-        requested = {c: [query_addr[i]] for i, c in enumerate(self._cols)}
-        df, _ = engine._joined_rollup(
-            self._fact, self.spark, self._dims_spec(), requested
-        )
-        wprod = F.lit(1.0)
-        for c in self._cols:
-            if f"__w_{c}" in df.columns:
-                wprod = wprod * F.col(f"__w_{c}")
+        The slice is budgeted: the collect is ``limit(budget + 1)``, which
+        bounds driver memory up-front (no extra count job), and a slice
+        above budget raises instead of silently materializing."""
         budget = int(self.base_rule_driver_budget)
-        rows = df.select(
-            *[F.col(c) for c in self._cols], wprod.alias("__w_total"),
-            F.col("value"),
-        ).limit(budget + 1).collect()
+        lf = self._local_copy()
+        if lf is not None:
+            at, weight = lf.weighted_rows(self.dimensions, query_addr)
+            rows = list(zip(
+                lf.ids[:, at].T.tolist(), weight.tolist(),
+                np.where(lf.null[at], None, lf.values[at]).tolist(),
+            ))
+        else:
+            requested = {c: [query_addr[i]] for i, c in enumerate(self._cols)}
+            df, _ = engine._joined_rollup(
+                self._fact, self.spark, self._dims_spec(), requested
+            )
+            wprod = F.lit(1.0)
+            for c in self._cols:
+                if f"__w_{c}" in df.columns:
+                    wprod = wprod * F.col(f"__w_{c}")
+            rows = [
+                (list(r[:-2]), r[-2], r[-1])
+                for r in df.select(
+                    *[F.col(c) for c in self._cols], wprod.alias("__w_total"),
+                    F.col("value"),
+                ).limit(budget + 1).collect()
+            ]
         if len(rows) > budget:
             raise TinyOlapError(
                 f"BASE_LEVEL rule '{getattr(rdef.function, '__name__', rdef)}'"
@@ -2003,8 +2230,7 @@ class Cube:
         if not rows:
             return None
         total = 0.0
-        for row in rows:
-            trigger_idx = [row[c] for c in self._cols]
+        for trigger_idx, weight, value in rows:
             for pos, midx in rdef.trigger_idx_pattern or rdef.idx_pattern:
                 trigger_idx[pos] = midx
             try:
@@ -2012,9 +2238,9 @@ class Cube:
             except Exception as exc:  # noqa: BLE001
                 return map_rule_error(exc)
             if v is CONTINUE:
-                v = row["value"]
+                v = value
             if isinstance(v, float):
-                total += v * row["__w_total"]
+                total += v * weight
         return total
 
     # --------------------------------------------------------------- rules

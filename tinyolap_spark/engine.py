@@ -69,6 +69,18 @@ _closure_cache: dict[tuple[int, int, int], DataFrame] = {}
 _members_cache: dict[tuple[int, int, int], DataFrame] = {}
 
 
+def _ckpt_rdd(df: DataFrame):
+    """The JVM RDD whose storage blocks back a ``localCheckpoint``-ed
+    DataFrame (``LogicalRDD`` plan), or None for any other plan shape.
+    Needed because checkpoint blocks are otherwise only reclaimable via
+    ContextCleaner-after-driver-GC: ``DataFrame.unpersist()`` has no
+    CacheManager entry to drop for them."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        return plan.rdd()
+    return None
+
+
 def _distributed_closure_df(spark: SparkSession, dim: Dimension) -> DataFrame:
     """Closure table for a ``large_dim`` dimension, built IN SPARK.
 
@@ -100,7 +112,7 @@ def _distributed_closure_df(spark: SparkSession, dim: Dimension) -> DataFrame:
     joins are free to broadcast the tiny edge frame when AQE sees fit).
     Checkpoint blocks are freed deterministically via the tracked JVM
     RDD (``unpersist()`` is a no-op for them — see
-    ``pipeline.dedup._ckpt_rdd``) on ``clear_caches`` / version bump.
+    :func:`_ckpt_rdd`) on ``clear_caches`` / version bump.
     """
     parents: list[int] = []
     children: list[int] = []
@@ -329,8 +341,6 @@ def _from_df_leaf_frame(spark: SparkSession, dim: Dimension) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        from .pipeline.dedup import _ckpt_rdd
-
         rdd = _ckpt_rdd(df)
         if rdd is not None:
             _ckpt_leaves[key] = rdd
@@ -513,8 +523,6 @@ def _from_df_leaf_frame(spark: SparkSession, dim: Dimension) -> DataFrame:
         )
     )
     df = leaves.localCheckpoint(eager=True)
-    from .pipeline.dedup import _ckpt_rdd
-
     rdd = _ckpt_rdd(df)
     if rdd is not None:
         _ckpt_leaves[key] = rdd
@@ -605,8 +613,6 @@ def _from_df_edge_frame(spark: SparkSession, dim: Dimension) -> DataFrame:
             )
         )
     df = df.localCheckpoint(eager=True)
-    from .pipeline.dedup import _ckpt_rdd
-
     rdd = _ckpt_rdd(df)
     if rdd is not None:
         _ckpt_edges[key] = rdd
@@ -791,8 +797,6 @@ def closure_df(spark: SparkSession, dim: Dimension) -> DataFrame:
                 else _distributed_closure_df(spark, dim)
             )
             df = built.localCheckpoint(eager=True)
-            from .pipeline.dedup import _ckpt_rdd
-
             rdd = _ckpt_rdd(df)
             if rdd is not None:
                 _ckpt_closures[key] = rdd

@@ -195,23 +195,63 @@ class LocalFact:
     def aggregate(
         self,
         dims: Sequence[Dimension],
-        addresses: "dict[int, Sequence[int]]",
+        addresses: "dict[int, Sequence[Optional[int]]]",
+        rows: "Optional[tuple[np.ndarray, np.ndarray]]" = None,
     ) -> "dict[int, Optional[float]]":
         """Aggregated cells by request id — the results
-        :func:`engine.aggregate_cells` returns.  Requests are grouped by
-        the dimensions they constrain (all-covering weight-1 tops
-        constrain nothing); each group is one pass over the rows."""
+        :func:`engine.aggregate_cells` returns: ``None`` where no row lies
+        under the address, else the weighted sum of the rows' values
+        (``0.0`` when none holds a number).  Requests are grouped by the
+        dimensions they constrain (all-covering weight-1 tops, and
+        positions that are ``None``, constrain nothing); each group is
+        one pass over the rows.  ``rows``: ``(ids, values)`` rolled up in
+        place of the stored cells — an ``(n_dims, n)`` member id array
+        and ``n`` float values."""
+        ids, values = rows if rows is not None else (self.ids, self.values)
         groups: dict[tuple[int, ...], dict[int, Sequence[int]]] = {}
         for rid, addr in addresses.items():
             sig = tuple(
                 i for i, a in enumerate(addr)
-                if int(a) not in dims[i]._trivial_tops
+                if a is not None and int(a) not in dims[i]._trivial_tops
             )
             groups.setdefault(sig, {})[rid] = addr
         out: dict[int, Optional[float]] = {}
         for sig, reqs in groups.items():
-            out.update(self._rollup(dims, sig, reqs))
+            out.update(self._rollup(dims, sig, reqs, ids, values))
         return out
+
+    def under(
+        self, dims: Sequence[Dimension], members: "dict[int, Sequence[int]]"
+    ) -> np.ndarray:
+        """Mask of the stored rows whose member on each dimension ``i`` of
+        ``members`` lies under one of ``members[i]``."""
+        mask = np.ones(len(self.codes), dtype=bool)
+        for i, anc in members.items():
+            if {int(a) for a in anc} <= dims[i]._trivial_tops:
+                continue
+            m, _, _ = self._closure(dims[i]).pairs(anc, int(self.radix[i]))
+            inside = np.zeros(int(self.radix[i]), dtype=bool)
+            inside[m] = True
+            mask &= inside[self.ids[i]]
+        return mask
+
+    def weighted_rows(
+        self, dims: Sequence[Dimension], addr: Sequence[int]
+    ) -> "tuple[np.ndarray, np.ndarray]":
+        """``(rows, weight)``: the stored rows under the address ``addr``
+        and the product of each row's closure weights to it."""
+        rows = np.flatnonzero(
+            self.under(dims, {i: [a] for i, a in enumerate(addr)})
+        )
+        weight = np.ones(len(rows))
+        for i, a in enumerate(addr):
+            if int(a) in dims[i]._trivial_tops:
+                continue
+            m, _, w = self._closure(dims[i]).pairs([a], int(self.radix[i]))
+            of = np.zeros(int(self.radix[i]))
+            of[m] = w
+            weight *= of[self.ids[i][rows]]
+        return rows, weight
 
     def _closure(self, dim: Dimension) -> _Closure:
         key = (dim.uid, dim.version)
@@ -225,9 +265,11 @@ class LocalFact:
         dims: Sequence[Dimension],
         sig: Sequence[int],
         reqs: "dict[int, Sequence[int]]",
+        ids: np.ndarray,
+        values: np.ndarray,
     ) -> "dict[int, Optional[float]]":
         """Requests constraining exactly the dimensions ``sig``.  Every
-        fact row fans out to each requested ancestor it sits under (one
+        row fans out to each requested ancestor it sits under (one
         pair per (row, ancestor), weight multiplied in), keyed by the
         mixed-radix slot tuple of those ancestors; the keys are then
         matched against the requested keys and summed."""
@@ -241,16 +283,16 @@ class LocalFact:
         if span >= _MAX_CODE and len(reqs) > 1:
             out: dict[int, Optional[float]] = {}
             for rid, addr in reqs.items():
-                out.update(self._rollup(dims, sig, {rid: addr}))
+                out.update(self._rollup(dims, sig, {rid: addr}, ids, values))
             return out
         # most selective dimension first: later steps see fewer rows
         steps.sort(key=lambda st: len(st[2][0]))
         rows = None  # fact row of each pair so far (None = every row)
-        key = np.zeros(len(self.codes), dtype=np.int64)
+        key = np.zeros(ids.shape[1], dtype=np.int64)
         weight = None
         for i, anc, (m, slot, w) in steps:
             radix = int(self.radix[i])
-            col = self.ids[i] if rows is None else self.ids[i][rows]
+            col = ids[i] if rows is None else ids[i][rows]
             deg = np.bincount(m, minlength=radix)
             if len(m) and deg.max() > 1:
                 # a member under several requested ancestors: one pair
@@ -272,7 +314,7 @@ class LocalFact:
             rows = src if rows is None else rows[src]
             key = key[src] * len(anc) + slot_at
             weight = w_at if weight is None else weight[src] * w_at
-        vals = self.values if rows is None else self.values[rows]
+        vals = values if rows is None else values[rows]
         if weight is not None:
             vals = vals * weight
         req_keys = []

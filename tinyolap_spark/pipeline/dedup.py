@@ -27,6 +27,8 @@ import warnings
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..engine import _ckpt_rdd
+
 _log = logging.getLogger(__name__)
 
 #: Cap on the candidate-matched corpus-id set collected for the verify-side
@@ -423,18 +425,6 @@ def corpus_is_small(df: DataFrame) -> bool:
     except Exception:  # noqa: BLE001 — connect mode / torn session
         return False
     return 0 <= sz < SMALL_CORPUS_STATS_BYTES
-
-
-def _ckpt_rdd(df: DataFrame):
-    """The JVM RDD whose storage blocks back a ``localCheckpoint``-ed
-    DataFrame (``LogicalRDD`` plan), or None for any other plan shape.
-    Needed because checkpoint blocks are otherwise only reclaimable via
-    ContextCleaner-after-driver-GC: ``DataFrame.unpersist()`` has no
-    CacheManager entry to drop for them."""
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getSimpleName() == "LogicalRDD":
-        return plan.rdd()
-    return None
 
 
 def _banded_frame(

@@ -13,9 +13,11 @@ Grammar (the reference's surface)::
 - the result is the DENSE cartesian product of the slicer member lists with
   one row per address and a ``value`` column (empty cells -> NULL).
 
-Execution is one Spark job (closure join + grouped weighted sum) left-joined
-onto the dense member product — the reference instead runs one full cell
-read per product element (``query.py:98-136``).
+Execution is one batch read of the dense member product
+(``Cube._read_grid``): from the cube's driver copy of a small fact, else
+one Spark job (closure join + grouped weighted sum); rule cells evaluate
+in the same batch.  The reference instead runs one full cell read per
+product element (``query.py:98-136``).
 
 In addition to this dialect, :func:`register_views` exposes the cube's fact,
 members and closure tables as temp views so users can run FULL Spark SQL
@@ -29,7 +31,6 @@ import re
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -148,21 +149,10 @@ class Query:
                 "Query(..., max_cells=...)"
             )
 
-        # ---- one aggregation job ----------------------------------------
+        # ---- one batch read of the dense product -------------------------
         positions = list(range(len(cube.dimensions)))
-        axes = {cube._cols[p]: member_lists[p] for p in positions}
-        group_cols = [cube._cols[p] for p in positions]
-        # aggregate navigation: an eligible registered summary answers the
-        # dialect query the same way it answers View grids
-        grid = engine.aggregate_grid(
-            cube._rollup_fact(axes), cube.spark, cube._dims_spec(),
-            axes, group_cols,
-        )
-        got = {
-            tuple(r[c] for c in group_cols): r["value"] for r in grid.collect()
-        }
+        values, _ = cube._read_grid([member_lists[p] for p in positions])
 
-        # ---- dense product, definition order ----------------------------
         self.column_names = []
         for kind, payload in fields:
             if kind == "value":
@@ -172,24 +162,13 @@ class Query:
             else:
                 pos, aname = payload
                 self.column_names.append(f"{cube.dimensions[pos].name}.{aname}")
-        from .rules import RuleScope
-
-        rule_scopes = (
-            RuleScope.ALL_LEVELS,
-            RuleScope.AGGREGATION_LEVEL,
-            RuleScope.BASE_LEVEL,
-        )
-        has_rules = len(cube.rules) > 0
         self.records = []
+        # definition order
         for combo in itertools.product(*[member_lists[p] for p in positions]):
-            if has_rules and cube.rules.match(combo, rule_scopes):
-                value = cube._get_idx(tuple(combo))
-            else:
-                value = got.get(tuple(combo))
             row: list[Any] = []
             for kind, payload in fields:
                 if kind == "value":
-                    row.append(value)
+                    row.append(values[combo])
                 elif kind == "dim":
                     row.append(
                         cube.dimensions[payload]._defs[combo[payload]].name

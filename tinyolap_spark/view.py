@@ -2,16 +2,18 @@
 
 The reference refreshes a view by running one point aggregation per
 (row, col) grid position (``view.py:769-911`` — O(rows x cols) index
-intersections).  Here a refresh is **ONE Spark job**:
+intersections).  Here a refresh is ONE batch read of the grid
+(``Cube._read_grid``): from the cube's driver copy of a small fact, with
+no Spark job, else as one Spark job
 
     fact ⋈ broadcast(closure per axis dim, filtered to axis members)
-         |> groupBy(row member ids..., col member ids...)
+         |> groupBy(axis member ids...)
          |> sum(value * weights)
 
-then the small grid collects to the driver where ordering (definition
-order, never alphabetical — reference ``view.py:167-171``), zero
-suppression, number formats and rendering happen.  Rule-covered cells are
-evaluated after the batch against the warm cell cache.
+Rule-covered cells evaluate in the same batch, as ``Cube.get_many``
+evaluates them.  Ordering (definition order, never alphabetical —
+reference ``view.py:167-171``), zero suppression, number formats and
+rendering happen on the driver.
 """
 
 from __future__ import annotations
@@ -23,9 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import engine
-from .cube import Cube
+from .cube import _RULE_SCOPES, Cube
 from .metadata import InvalidAddressError, Member
-from .rules import RuleScope
 
 
 AxisSpec = Sequence[tuple[str, Union[str, None, Sequence[str]]]]
@@ -140,90 +141,35 @@ class View:
 
         t0 = time.time()
         cube = self.cube
-        cube._flush()
-        axes: dict[str, list[int]] = {}
-        for pos, idxs in zip(
-            self.filter_axis.dims + self.row_axis.dims + self.col_axis.dims,
-            self.filter_axis.members + self.row_axis.members + self.col_axis.members,
-        ):
-            axes[cube._cols[pos]] = list(idxs)
-        group_positions = self.row_axis.dims + self.col_axis.dims
-        group_cols = [cube._cols[p] for p in group_positions]
-        grid_df = engine.aggregate_grid(
-            cube._rollup_fact(axes), cube.spark, cube._dims_spec(),
-            axes, group_cols,
-        )
-        collected = {
-            tuple(r[c] for c in group_cols): r["value"] for r in grid_df.collect()
-        }
-        # full idx address template from the filter axis + warm the cube cache
-        base_addr = [0] * len(cube.dimensions)
-        for pos, idxs in zip(self.filter_axis.dims, self.filter_axis.members):
-            base_addr[pos] = idxs[0]
-        n_rules = 0
+        row_dims, col_dims = self.row_axis.dims, self.col_axis.dims
+        members: list[Sequence[int]] = [[] for _ in cube.dimensions]
+        for pos, idxs in self._axes():
+            members[pos] = idxs
+        values, tier = cube._read_grid(members)
         self._grid = {}
-        rule_scopes = (
-            RuleScope.ALL_LEVELS,
-            RuleScope.AGGREGATION_LEVEL,
-            RuleScope.BASE_LEVEL,
-        )
-        has_rules = len(cube.rules) > 0
-        if has_rules:
-            # batch-prefetch across the whole grid so rule cells evaluate
-            # with (near) zero extra jobs: expression-rule operands via the
-            # plain prefetch; opaque rule cells via the batched aggregated
-            # evaluation + rule-read prefetch (cache-warming — the loop's
-            # _get_idx then serves from cache)
-            operand_addrs = []
-            rule_cell_addrs = []
-            for rpos in self.row_axis.positions:
-                for cpos in self.col_axis.positions:
-                    addr = list(base_addr)
-                    for p, m in zip(self.row_axis.dims, rpos):
-                        addr[p] = m
-                    for p, m in zip(self.col_axis.dims, cpos):
-                        addr[p] = m
-                    rdef = cube.rules.match(tuple(addr), rule_scopes)
-                    if rdef is None:
-                        continue
-                    if rdef.expression is not None:
-                        operand_addrs.extend(
-                            cube._expression_operand_addrs(
-                                rdef, tuple(addr)
-                            ).values()
-                        )
-                    else:
-                        rule_cell_addrs.append(tuple(addr))
-            if operand_addrs:
-                cube._prefetch(operand_addrs)
-            if rule_cell_addrs and cube.caching:
-                cube._prefetch_agg_rule_cells(rule_cell_addrs)
-                cube._prefetch_rule_reads(rule_cell_addrs)
-        for rpos in self.row_axis.positions:
-            for cpos in self.col_axis.positions:
-                addr = list(base_addr)
-                for p, m in zip(self.row_axis.dims, rpos):
-                    addr[p] = m
-                for p, m in zip(self.col_axis.dims, cpos):
-                    addr[p] = m
-                taddr = tuple(addr)
-                if has_rules and cube.rules.match(taddr, rule_scopes):
-                    n_rules += 1
-                    v = cube._get_idx(taddr)  # rule path, cache-backed
-                else:
-                    v = collected.get(tuple(rpos) + tuple(cpos))
-                    if cube.caching:
-                        cube._cache[taddr] = v
-                self._grid[(tuple(rpos), tuple(cpos))] = v
+        n_rules = 0
+        for addr in itertools.product(*members):
+            rpos = tuple(addr[p] for p in row_dims)
+            cpos = tuple(addr[p] for p in col_dims)
+            self._grid[(rpos, cpos)] = values[addr]
+            n_rules += cube.rules.match(addr, _RULE_SCOPES) is not None
         self.stats = {
             "refresh_sec": time.time() - t0,
             "rows": len(self.row_axis),
             "cols": len(self.col_axis),
             "cells": len(self._grid),
             "rule_cells": n_rules,
-            "executed_as": "single_spark_job",
+            "executed_as": tier,
         }
         return self
+
+    def _axes(self) -> list[tuple[int, list[int]]]:
+        """(dimension position, member ids) of every axis dimension."""
+        return [
+            (pos, list(idxs))
+            for axis in (self.filter_axis, self.row_axis, self.col_axis)
+            for pos, idxs in zip(axis.dims, axis.members)
+        ]
 
     # ------------------------------------------------------------ helpers
     def _names(self, axis: ViewAxis, position: tuple[int, ...]) -> tuple[str, ...]:
@@ -354,12 +300,7 @@ class View:
         """The grid as a Spark DataFrame (row header cols + one col per
         column position) — stays distributed for big grids."""
         cube = self.cube
-        axes: dict[str, list[int]] = {}
-        for pos, idxs in zip(
-            self.filter_axis.dims + self.row_axis.dims + self.col_axis.dims,
-            self.filter_axis.members + self.row_axis.members + self.col_axis.members,
-        ):
-            axes[cube._cols[pos]] = list(idxs)
+        axes = {cube._cols[pos]: idxs for pos, idxs in self._axes()}
         group_cols = [cube._cols[p] for p in self.row_axis.dims + self.col_axis.dims]
         grid = engine.aggregate_grid(
             cube._rollup_fact(axes), cube.spark, cube._dims_spec(),
