@@ -19,13 +19,34 @@ RSS (VmHWM, reset before the build), and one single-cell write patch
 record count runs in a fresh process.  Both tiers' answers are checked
 against each other.
 
-Usage (from the repository root, ~5 min on 4 cores)::
+With ``--rules`` it times the BASE_LEVEL rule tiers and a view grid
+instead, copy (``Cube._base_rule_local``) against forced Spark
+(``Cube._base_rule_spark``, ``engine.aggregate_grid``), on a rules model
+shaped like perfbench's ``planning``: ``keys`` (100 groups of leaves
+under ``AllKeys``) x ``regions`` (30 leaves under ``AllRegions``) x
+``measures`` (Quantity, Price, Cost stored; each of the ``keys`` x
+``regions`` leaves holds all three), with the number of key leaves set
+by the cell count:
+
+- ``opaque``: an opaque ``LogQ = log1p(Quantity)`` (alone on
+  ``measures``, so the batched tier runs it) at 10 groups and the top;
+- ``compiled``: an ``arith``-compiled ``Sales = Quantity * Price`` at the
+  same 11 addresses;
+- ``grid``: the ``planning`` view, 10 groups x (Quantity, Price, Cost,
+  Sales), through ``Cube._read_grid`` with the cell cache cleared.
+
+Each shape runs once untimed first (Spark's closure frames, the copy's
+closure tables); both tiers' answers and rule paths are checked against
+each other.
+
+Usage (from the repository root, ~5 min on 4 cores for cell reads)::
 
     python scripts/local_tier_crossover.py                 # 100k 300k 1M 3M
     python scripts/local_tier_crossover.py 100000 300000   # chosen sizes
+    python scripts/local_tier_crossover.py --rules         # rule tiers
 
 Prints one markdown table row per size; ``local.CELL_LIMIT`` is set from
-this table (ARCHITECTURE §5, "Read tiers").
+these tables (ARCHITECTURE §5, "Read tiers").
 """
 
 from __future__ import annotations
@@ -148,22 +169,184 @@ def measure(records: int) -> dict:
         spark.stop()
 
 
+RULE_GROUPS = 100
+RULE_REGIONS = 30
+RULE_STORED = ("Quantity", "Price", "Cost")
+RULE_REPS = 3
+
+
+def _sales(c):
+    q = c["Quantity"]
+    p = c["Price"]
+    if q is not None and p is not None:
+        return q * p
+
+
+def _logq(c):
+    import math
+
+    q = c["Quantity"]
+    if q is not None:
+        return math.log1p(q)
+
+
+def measure_rules(cells: int) -> dict:
+    sys.path[:0] = [ROOT]
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import SparkSession
+
+    from tinyolap_spark import Database, local
+    from tinyolap_spark.rules import RuleScope
+
+    n = len(os.sched_getaffinity(0))
+    spark = (
+        SparkSession.builder.master(f"local[{n}]")
+        .config("spark.sql.shuffle.partitions", str(n))
+        .config("spark.driver.memory", "3g")
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        per_group = max(1, cells // (RULE_GROUPS * RULE_REGIONS * 3))
+        db = Database(f"rulecross{cells}", spark=spark)
+        keys = db.add_dimension("keys").edit()
+        for g in range(RULE_GROUPS):
+            keys.add_many(f"g{g}", [f"k{g}_{i}" for i in range(per_group)])
+        keys.add_many("AllKeys", [f"g{g}" for g in range(RULE_GROUPS)])
+        keys.commit()
+        regions = db.add_dimension("regions").edit()
+        regions.add_many("AllRegions", [f"r{i}" for i in range(RULE_REGIONS)])
+        regions.commit()
+        measures = db.add_dimension("measures").edit()
+        measures.add_many(list(RULE_STORED) + ["Sales", "LogQ"])
+        measures.commit()
+        cube = db.add_cube("rules", [keys, regions, measures])
+        kid = np.array([
+            keys.member(f"k{g}_{i}").index
+            for g in range(RULE_GROUPS) for i in range(per_group)
+        ], dtype=np.int32)
+        rid = np.array([
+            regions.member(f"r{i}").index for i in range(RULE_REGIONS)
+        ], dtype=np.int32)
+        mid = np.array([
+            measures.member(m).index for m in RULE_STORED
+        ], dtype=np.int32)
+        k_col = np.repeat(kid, len(rid) * len(mid))
+        r_col = np.tile(np.repeat(rid, len(mid)), len(kid))
+        m_col = np.tile(mid, len(kid) * len(rid))
+        rng = np.random.default_rng(7)
+        kc, rc, mc = cube.dim_cols
+        cube.load_dataframe(spark.createDataFrame(pd.DataFrame({
+            kc: k_col, rc: r_col, mc: m_col,
+            "value": rng.integers(1, 50, len(k_col)).astype(np.float64),
+        })), assume_unique=True)
+        del k_col, r_col, m_col
+        fact_cells = cube.fact.count()
+        groups = [keys.member(f"g{g}").index for g in range(10)]
+        top = [keys.member("AllKeys").index]
+        all_r = regions.member("AllRegions").index
+
+        def at(measure):
+            m = measures.member(measure).index
+            return [(k, all_r, m) for k in groups + top]
+
+        def rule_of(measure):
+            m = measures.member(measure).index
+            return next(r for r in cube.rules if r.idx_pattern[0][1] == m)
+
+        def agg(measure):
+            def run():
+                cube._cache.clear()
+                out = cube._aggregate_base_rule_many(
+                    rule_of(measure), at(measure)
+                )
+                return out, cube._last_base_rule_path
+            return run
+
+        grid_members = [
+            groups, [all_r],
+            [measures.member(m).index for m in RULE_STORED + ("Sales",)],
+        ]
+
+        def grid():
+            cube._cache.clear()
+            return cube._read_grid(grid_members)
+
+        def tiers(fn, name, row):
+            limit = local.CELL_LIMIT
+            assert cube._local_copy() is not None
+            fn()
+            copy_ms, got = _median_ms(fn, RULE_REPS)
+            local.CELL_LIMIT = 0
+            cube._local = cube._local_over = None
+            try:
+                fn()
+                spark_ms, want = _median_ms(fn, SPARK_REPS)
+            finally:
+                local.CELL_LIMIT = limit
+                cube._local = cube._local_over = None
+            if name == "grid":
+                assert (got[1], want[1]) == ("local", "spark")
+                got, want = got[0], want[0]
+            else:
+                assert got[1] == want[1] != "driver", f"{name}: paths"
+                got, want = got[0], want[0]
+            for a, w in want.items():
+                g = got[a]
+                assert (g is None) == (w is None) and (
+                    w is None or abs(g - w) <= 1e-9 * max(1.0, abs(w))
+                ), f"{name}: tiers disagree at {a}: {g} != {w}"
+            row[f"{name}_copy_ms"] = round(copy_ms, 1)
+            row[f"{name}_spark_ms"] = round(spark_ms)
+
+        row = {"cells": fact_cells, "key_leaves": RULE_GROUPS * per_group}
+        # LogQ first and alone: with Sales on `measures` too, the nested-
+        # rule check sends an opaque rule to the driver loop
+        cube.register_rule(_logq, trigger=["measures:LogQ"],
+                           scope=RuleScope.BASE_LEVEL,
+                           feeder=["measures:Quantity"])
+        tiers(agg("LogQ"), "opaque", row)
+        cube.register_rule(_sales, trigger=["measures:Sales"],
+                           scope=RuleScope.BASE_LEVEL,
+                           feeder=["measures:Quantity"])
+        tiers(agg("Sales"), "compiled", row)
+        tiers(grid, "grid", row)
+        return row
+    finally:
+        spark.stop()
+
+
 def main(argv) -> None:
+    rules = argv[:1] == ["--rules"]
+    if rules:
+        argv = argv[1:]
     if argv[:1] == ["--one"]:
-        print(json.dumps(measure(int(argv[1]))))
+        fn = measure_rules if argv[2:] == ["rules"] else measure
+        print(json.dumps(fn(int(argv[1]))))
         return
     sizes = [int(a) for a in argv] or list(SIZES)
-    cols = ["records", "cells", "build_s", "copy_mb", "build_peak_mb",
-            "patch_ms"] + [
-        f"{s}_{t}_ms" for s in ("base", "drill1", "drill3", "point")
-        for t in ("copy", "spark")
-    ]
+    shapes = (
+        ("opaque", "compiled", "grid") if rules
+        else ("base", "drill1", "drill3", "point")
+    )
+    cols = (
+        ["cells", "key_leaves"] if rules
+        else ["records", "cells", "build_s", "copy_mb", "build_peak_mb",
+              "patch_ms"]
+    ) + [f"{s}_{t}_ms" for s in shapes for t in ("copy", "spark")]
     print("| " + " | ".join(cols) + " |")
     print("|" + "---|" * len(cols))
     for size in sizes:
         out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--one", str(size)],
+            [sys.executable, os.path.abspath(__file__), "--one", str(size)]
+            + (["rules"] if rules else []),
             capture_output=True, text=True, check=True,
+            env=dict(os.environ, PYTHONPATH=ROOT),
         ).stdout.strip().splitlines()[-1]
         row = json.loads(out)
         print("| " + " | ".join(str(row[c]) for c in cols) + " |", flush=True)

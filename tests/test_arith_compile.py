@@ -217,7 +217,7 @@ def _compare_paths(spark, cube, rule_fn, addrs, monkeypatch):
                 del rdef._arith_plan
         cube._cache.clear()
         got_opaque = cube.get_many(addrs)
-        assert cube._last_base_rule_path in ("executor", "driver")
+        assert cube._last_base_rule_path == "executor"
     for ac, ao, addr in zip(got_compiled, got_opaque, addrs):
         if isinstance(ao, float):
             assert ac == pytest.approx(ao), addr

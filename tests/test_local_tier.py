@@ -245,6 +245,16 @@ def test_rule_views_and_sql_from_copy_match_spark(spark, monkeypatch):
     assert cells[("All", "LogQ")] == pytest.approx(
         sum(math.log1p(i) for i in range(5))
     )
+    # LogQ alone on its dimension: the copy runs the slice function
+    alone = db.add_cube("c_logq", [keys, measures])
+    alone.write_rows([(f"k{i}", "Qty", float(i)) for i in range(5)])
+    alone.register_rule(logq, trigger=["measures:LogQ"],
+                        scope=RuleScope.BASE_LEVEL, feeder=["measures:Qty"])
+    views = [dict(rows=[("keys", row_keys)], columns=[("measures", ["LogQ"])])]
+    sqls = ["SELECT keys, value FROM c_logq WHERE keys=*, measures=LogQ"]
+    got = _grids_copy_vs_spark(db, alone, views, sqls, monkeypatch)
+    assert got[0][-1] == pytest.approx(sum(math.log1p(i) for i in range(5)))
+    assert alone._last_base_rule_path == "executor"
 
 
 def test_grid_keeps_point_reads_of_base_cells(spark, monkeypatch):

@@ -440,7 +440,10 @@ def test_get_many_scattered_addresses_prune_combos(spark, monkeypatch):
 def test_copy_backed_rules_and_view_run_no_spark_job(spark):
     """On a cube with a driver copy of its fact, leaf, group and top cells
     of a compiled and of an opaque BASE_LEVEL rule, and a view over
-    stored and rule measures, are all answered without a Spark job."""
+    stored and rule measures, are all answered without a Spark job.  The
+    opaque rule shares its dimension with the compiled one, so the driver
+    loop answers it; alone on its dimension (a second cube) the copy runs
+    its slice function."""
     import math
 
     from tinyolap_spark import View
@@ -513,3 +516,19 @@ def test_copy_backed_rules_and_view_run_no_spark_job(spark):
         for m in view_measures:
             assert v.cell_by_names([g], [m]) == pytest.approx(want(ks, m))
     assert v.stats["executed_as"] == "local"
+
+    alone = db.add_cube("c_logq", [keys, measures])
+    alone.write_rows([
+        (k, m, v) for k, row in stored.items() for m, v in row.items()
+    ])
+    alone.register_rule(logq, trigger=["measures:LogQ"],
+                        scope=RuleScope.BASE_LEVEL,
+                        feeder=["measures:Quantity"])
+    assert alone["k0", "Quantity"] == 1.0  # builds the copy
+    logq_targets = [(k, "LogQ") for k in ("k4", "g1", "All")]
+    got, jobs = _count_jobs(
+        spark, "copy-opaque", lambda: alone.get_many(logq_targets)
+    )
+    assert got == [pytest.approx(want(under[k], "LogQ")) for k, _ in logq_targets]
+    assert jobs == 0
+    assert alone._last_base_rule_path == "executor"

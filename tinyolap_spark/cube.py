@@ -1378,11 +1378,12 @@ class Cube:
 
     def _read_grid(
         self, members: "Sequence[Sequence[int]]"
-    ) -> "tuple[dict[tuple[int, ...], Any], str]":
+    ) -> "tuple[dict[tuple[int, ...], Any], str, int]":
         """Every cell of the cartesian product of ``members`` (a member id
-        list per dimension), and the tier that read its stored cells:
+        list per dimension), the tier that read its stored cells —
         ``"local"`` (`LocalFact.aggregate` over the driver copy) or
-        ``"spark"`` (one `engine.aggregate_grid` job).  A stored cell
+        ``"spark"`` (one `engine.aggregate_grid` job) — and how many of
+        its cells a rule answered.  A stored cell
         reads with aggregate semantics (a base cell holding only a string
         reads 0.0); rule cells evaluate as in `get_many`."""
         self._flush()
@@ -1418,7 +1419,7 @@ class Cube:
         if ruled:
             self._prefetch(ruled)
             values.update((a, self._get_idx(a)) for a in ruled)
-        return values, "spark" if lf is None else "local"
+        return values, "spark" if lf is None else "local", len(ruled)
 
     def _prefetch_agg_rule_cells(
         self, idx_addresses: Sequence[tuple[int, ...]]
@@ -1721,10 +1722,7 @@ class Cube:
                 for i in range(len(self._cols))
             ]
             if lf is not None:
-                hit = np.flatnonzero(
-                    lf.under(self.dimensions, dict(enumerate(union)))
-                )
-                row = lf.ids[:, hit[0]].tolist() if len(hit) else None
+                row = lf.first_under(self.dimensions, dict(enumerate(union)))
             else:
                 sdf, _ = engine._joined_rollup(
                     self._fact, self.spark, self._dims_spec(),
@@ -1793,30 +1791,31 @@ class Cube:
             if any(pdim._defs[m].level != 0 for m in read_midxs)
             else frozenset(i for i, d in pdim._defs.items() if d.level == 0)
         )
-        run = (
-            self._slice_runner(rdef, p, trigger_midx, feeder_midx, p_leaves)
+        evaluate = (
+            self._slice_evaluator(rdef, p, trigger_midx, feeder_midx, p_leaves)
             if plan is None
             else None
         )
         if lf is not None:
             return self._base_rule_local(
-                lf, plan, run, p, feeder_midx, p_leaves, idx_addresses, qaddrs
+                lf, plan, evaluate, p, feeder_midx, p_leaves, idx_addresses,
+                qaddrs,
             )
         return self._base_rule_spark(
-            plan, run, p, feeder_midx, p_leaves, idx_addresses, qaddrs
+            plan, evaluate, p, feeder_midx, p_leaves, idx_addresses, qaddrs
         )
 
-    def _slice_runner(
+    def _slice_evaluator(
         self, rdef: RuleDef, p: int, trigger_midx: int, feeder_midx: int,
         p_leaves: "Optional[frozenset]",
     ) -> Callable:
-        """The opaque rule as a pandas batch function, run by
-        ``mapInPandas`` or directly on the driver.  Each input row is one
-        rest-leaf group: its rest ids, ``__vals`` ({p-member: value}) and
-        ``__w``; each output row holds the input's ``__a_*`` columns (when
-        present), ``v``, ``w`` and ``err``, in input order.  A read that
-        leaves the slice errs ``"__nonlocal__"``.  The function must not
-        capture the cube: executors unpickle it."""
+        """The opaque rule over rest-leaf groups, run by ``mapInPandas``
+        or directly on the driver: ``evaluate(groups)`` takes ``(rest ids,
+        {p-member: value})`` pairs and returns the lists ``v`` (the
+        group's value, ``None`` when not a number) and ``err`` (the error
+        sentinel, ``None`` when none), in input order.  A read that leaves
+        the slice errs ``"__nonlocal__"``.  The function must not capture
+        the cube: executors unpickle it."""
         p_col = self._cols[p]
         rest_cols = [c for c in self._cols if c != p_col]
         # per-dim name->idx resolution and idx->name maps (small
@@ -1832,125 +1831,79 @@ class Cube:
         fn = rdef.function
         n_dims = len(self._cols)
 
-        def run(batches):
-            import pandas as pd
-
+        def evaluate(groups):
             from tinyolap_spark.rules import CONTINUE as _CONT
             from tinyolap_spark.rules import map_rule_error as _map_err
 
-            for pdf in batches:
-                anc_cols = [c for c in pdf.columns if c.startswith("__a_")]
-                out = {c: [] for c in anc_cols}
-                out_v, out_w, out_err = [], [], []
-                for row in pdf.to_dict("records"):
-                    vals = row["__vals"] or {}
-                    rest = [row[c] for c in rest_cols]
-                    cell = _SliceCell(
-                        p, rest_cols, rest, trigger_midx, vals,
-                        dim_lookups, id_names, n_dims, p_col, p_leaves,
-                    )
-                    err = None
-                    v = None
-                    try:
-                        v = fn(cell)
-                    except _NonLocalRead:
-                        err = "__nonlocal__"
-                    except Exception as exc:  # noqa: BLE001
-                        err = _map_err(exc)
-                    if err is None:
-                        if v is _CONT:
-                            v = vals.get(feeder_midx)
-                        if isinstance(v, bool) or not isinstance(
-                            v, (int, float)
-                        ):
-                            v = None
-                    for c in anc_cols:
-                        out[c].append(row[c])
-                    out_v.append(float(v) if v is not None else None)
-                    out_w.append(row["__w"])
-                    out_err.append(err)
-                out_pdf = pd.DataFrame(out)
-                out_pdf["v"] = pd.Series(out_v, dtype="float64")
-                out_pdf["w"] = pd.Series(out_w, dtype="float64")
-                out_pdf["err"] = pd.Series(out_err, dtype="object")
-                yield out_pdf
+            out_v, out_err = [], []
+            for rest, vals in groups:
+                cell = _SliceCell(
+                    p, rest_cols, rest, trigger_midx, vals,
+                    dim_lookups, id_names, n_dims, p_col, p_leaves,
+                )
+                err = None
+                v = None
+                try:
+                    v = fn(cell)
+                except _NonLocalRead:
+                    err = "__nonlocal__"
+                except Exception as exc:  # noqa: BLE001
+                    err = _map_err(exc)
+                if err is None:
+                    if v is _CONT:
+                        v = vals.get(feeder_midx)
+                    if isinstance(v, bool) or not isinstance(
+                        v, (int, float)
+                    ):
+                        v = None
+                out_v.append(float(v) if v is not None else None)
+                out_err.append(err)
+            return out_v, out_err
 
-        return run
+        return evaluate
 
     def _base_rule_local(
         self, lf: "local.LocalFact", plan: "Optional[arith.ArithPlan]",
-        run: Optional[Callable], p: int, feeder_midx: int,
+        evaluate: Optional[Callable], p: int, feeder_midx: int,
         p_leaves: "Optional[frozenset]", idx_addresses, qaddrs,
     ) -> "Optional[dict[tuple[int, ...], Any]]":
         """`_aggregate_base_rule_many` over the driver copy: numpy for a
-        compiled plan, ``run`` on a pandas frame for an opaque rule, and
-        the per-group results roll up with `LocalFact.aggregate`."""
-        import pandas as pd
-
+        compiled plan, ``evaluate`` over the groups' {p-member: value}
+        maps for an opaque rule, and the per-group results roll up with
+        `LocalFact.aggregate`."""
         dims = self.dimensions
         rest = [i for i in range(len(dims)) if i != p]
-        keep = np.flatnonzero(lf.under(
-            dims, {i: sorted({int(qa[i]) for qa in qaddrs}) for i in rest}
-        ))
-        pid = lf.ids[p][keep]
-        valued = ~lf.null[keep]
-        values = lf.values[keep]
-        # group the rows per rest-leaf: their code without dimension p
-        _, first, group = np.unique(
-            lf.codes[keep] - pid.astype(np.int64) * lf.strides[p],
-            return_index=True, return_inverse=True,
+        under = {i: sorted({int(qa[i]) for qa in qaddrs}) for i in rest}
+        if plan is not None:
+            members = sorted(set(plan.reads) | {feeder_midx})
+        else:
+            members = None if p_leaves is not None else list(dims[p]._defs)
+        gids, group, member, total, present = lf.rule_slices(
+            dims, p, under, feeder_midx, members
         )
-        n_groups = len(first)
-        closure = lf._closure(dims[p])
-        radix = int(lf.radix[p])
-
-        def slice_col(m):
-            """Per group: the weighted sum of the rows under p-member
-            ``m``, whether it has such a row, whether one holds a number
-            (the sum is null without)."""
-            mem, _, w = closure.pairs([m], radix)
-            weight = np.zeros(radix)
-            weight[mem] = w
-            under = np.zeros(radix, dtype=bool)
-            under[mem] = True
-            rows = under[pid]
-            num = rows & valued
-            total = np.bincount(
-                group[num], weights=values[num] * weight[pid[num]],
-                minlength=n_groups,
-            )
-            has = np.bincount(group[rows], minlength=n_groups) > 0
-            present = np.bincount(group[num], minlength=n_groups) > 0
-            return total, has, present
-
-        fed = np.flatnonzero(slice_col(feeder_midx)[1])
-        gids = lf.ids[:, keep[first[fed]]]  # row p is ignored below
+        n = gids.shape[1]
         if plan is not None:
             cols = {}
             for m in plan.reads:
-                total, _, present = slice_col(m)
-                cols[m] = (total[fed], ~present[fed])
-            v, null, codes = arith.evaluate(plan, cols.__getitem__, len(fed))
+                of = member == m
+                col = np.zeros(n)
+                null = np.ones(n, dtype=bool)
+                col[group[of]] = total[of]
+                null[group[of]] = ~present[of]
+                cols[m] = (col, null)
+            v, null, codes = arith.evaluate(plan, cols.__getitem__, n)
             err = np.asarray(arith.ERRORS, dtype=object)[codes]
             path = "compiled"
         else:
-            members = (
-                np.unique(pid) if p_leaves is not None else closure.anc
-            )
-            maps: list[dict] = [{} for _ in range(len(fed))]
-            for m in members.tolist():
-                total, has, present = slice_col(m)
-                t, ok = total[fed].tolist(), present[fed].tolist()
-                for j in np.flatnonzero(has[fed]).tolist():
-                    maps[j][m] = t[j] if ok[j] else None
-            frame = pd.DataFrame(
-                {self._cols[i]: gids[i] for i in rest}
-            )
-            frame["__vals"] = maps
-            frame["__w"] = 1.0
-            out = next(run([frame]))
-            v, null = out["v"].to_numpy(), out["v"].isna().to_numpy()
-            err = out["err"].to_numpy()
+            maps: list[dict] = [{} for _ in range(n)]
+            for j, m, t, ok in zip(
+                group.tolist(), member.tolist(), total.tolist(),
+                present.tolist(),
+            ):
+                maps[j][m] = t if ok else None
+            v, err = evaluate(zip(gids[rest].T.tolist(), maps))
+            v = np.asarray(v, dtype=np.float64)  # None -> nan
+            null, err = np.isnan(v), np.asarray(err, dtype=object)
             path = "executor"
         # roll the group results up to the requested ancestor combos; an
         # error anywhere under a combo wins (the smallest sentinel, as the
@@ -1979,8 +1932,9 @@ class Cube:
         return {tuple(a): res[j] for j, a in enumerate(idx_addresses)}
 
     def _base_rule_spark(
-        self, plan: "Optional[arith.ArithPlan]", run: Optional[Callable],
-        p: int, feeder_midx: int, p_leaves: "Optional[frozenset]",
+        self, plan: "Optional[arith.ArithPlan]",
+        evaluate: Optional[Callable], p: int, feeder_midx: int,
+        p_leaves: "Optional[frozenset]",
         idx_addresses, qaddrs,
     ) -> "Optional[dict[tuple[int, ...], Any]]":
         """`_aggregate_base_rule_many` as one Spark query: the fact slice
@@ -2127,6 +2081,25 @@ class Cube:
             ", ".join(f"{c} int" for c in anc_cols)
             + ", v double, w double, err string"
         )
+
+        def run(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                rows = pdf.to_dict("records")
+                out_v, out_err = evaluate(
+                    ([row[c] for c in rest_cols], row["__vals"] or {})
+                    for row in rows
+                )
+                out = pd.DataFrame(
+                    {c: [row[c] for row in rows] for c in anc_cols}
+                )
+                out["v"] = pd.Series(out_v, dtype="float64")
+                out["w"] = pd.Series([row["__w"] for row in rows],
+                                     dtype="float64")
+                out["err"] = pd.Series(out_err, dtype="object")
+                yield out
+
         try:
             rows = (
                 evald.mapInPandas(run, schema=schema)
@@ -2197,11 +2170,7 @@ class Cube:
         budget = int(self.base_rule_driver_budget)
         lf = self._local_copy()
         if lf is not None:
-            at, weight = lf.weighted_rows(self.dimensions, query_addr)
-            rows = list(zip(
-                lf.ids[:, at].T.tolist(), weight.tolist(),
-                np.where(lf.null[at], None, lf.values[at]).tolist(),
-            ))
+            rows = lf.weighted_rows(self.dimensions, query_addr)
         else:
             requested = {c: [query_addr[i]] for i, c in enumerate(self._cols)}
             df, _ = engine._joined_rollup(

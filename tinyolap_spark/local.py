@@ -94,6 +94,33 @@ class _Closure:
         return m[keep][order], s[keep][order], w[keep][order]
 
 
+def _fan_out(
+    col: np.ndarray,
+    pairs: "tuple[np.ndarray, np.ndarray, np.ndarray]",
+    radix: int,
+) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
+    """``(row, slot, weight)``: one entry per (row, ancestor) for a column
+    ``col`` of member ids and the ``(member, slot, weight)`` closure pairs
+    of :meth:`_Closure.pairs`; rows under no ancestor drop out."""
+    m, slot, w = pairs
+    deg = np.bincount(m, minlength=radix)
+    if len(m) and deg.max() > 1:
+        # a member under several ancestors: one entry per (row, ancestor)
+        cnt = deg[col]
+        src = np.repeat(np.arange(len(col)), cnt)
+        first = np.repeat(np.cumsum(cnt) - cnt, cnt)
+        at = np.repeat((np.cumsum(deg) - deg)[col], cnt)
+        at += np.arange(len(src)) - first
+        return src, slot[at], w[at]
+    slot_of = np.full(radix, -1, dtype=np.int64)
+    slot_of[m] = slot
+    w_of = np.zeros(radix)
+    w_of[m] = w
+    s_col = slot_of[col]
+    src = np.flatnonzero(s_col >= 0)
+    return src, s_col[src], w_of[col[src]]
+
+
 class LocalFact:
     """See module docstring.  The arrays are never written after a build
     or patch; ``closures`` caches :class:`_Closure` tables by dimension
@@ -220,7 +247,7 @@ class LocalFact:
             out.update(self._rollup(dims, sig, reqs, ids, values))
         return out
 
-    def under(
+    def _under(
         self, dims: Sequence[Dimension], members: "dict[int, Sequence[int]]"
     ) -> np.ndarray:
         """Mask of the stored rows whose member on each dimension ``i`` of
@@ -235,13 +262,23 @@ class LocalFact:
             mask &= inside[self.ids[i]]
         return mask
 
+    def first_under(
+        self, dims: Sequence[Dimension], members: "dict[int, Sequence[int]]"
+    ) -> "Optional[list[int]]":
+        """Member ids of the first stored row whose member on each
+        dimension ``i`` of ``members`` lies under one of ``members[i]``;
+        ``None`` when there is none."""
+        hit = np.flatnonzero(self._under(dims, members))
+        return self.ids[:, hit[0]].tolist() if len(hit) else None
+
     def weighted_rows(
         self, dims: Sequence[Dimension], addr: Sequence[int]
-    ) -> "tuple[np.ndarray, np.ndarray]":
-        """``(rows, weight)``: the stored rows under the address ``addr``
-        and the product of each row's closure weights to it."""
+    ) -> "list[tuple[list[int], float, Optional[float]]]":
+        """``(ids, weight, value)`` of every stored row under the address
+        ``addr``: its member ids, the product of its closure weights to
+        ``addr`` and its number (``None`` for a string cell)."""
         rows = np.flatnonzero(
-            self.under(dims, {i: [a] for i, a in enumerate(addr)})
+            self._under(dims, {i: [a] for i, a in enumerate(addr)})
         )
         weight = np.ones(len(rows))
         for i, a in enumerate(addr):
@@ -251,7 +288,64 @@ class LocalFact:
             of = np.zeros(int(self.radix[i]))
             of[m] = w
             weight *= of[self.ids[i][rows]]
-        return rows, weight
+        values = np.where(self.null[rows], None, self.values[rows])
+        return list(zip(
+            self.ids[:, rows].T.tolist(), weight.tolist(), values.tolist()
+        ))
+
+    def rule_slices(
+        self,
+        dims: Sequence[Dimension],
+        p: int,
+        rest: "dict[int, Sequence[int]]",
+        feeder: int,
+        members: "Optional[Sequence[int]]" = None,
+    ) -> "tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]":
+        """The stored rows under ``rest`` (member ids per dimension other
+        than ``p``, as in :meth:`first_under`) grouped per rest-leaf (their
+        address without dimension ``p``), keeping the groups that hold a
+        row under the ``p``-member ``feeder``, and each group's slice
+        along ``p`` as sparse entries.  Returns ``(gids, group, member,
+        total, present)``: ``gids`` is the ``(n_dims, n_groups)`` member
+        id array of the groups (row ``p`` holds one of the group's members
+        of ``p``); entry ``k`` says group ``group[k]`` holds a row under
+        the ``p``-member ``member[k]``, with the closure-weighted sum
+        ``total[k]`` of the rows' numbers and ``present[k]`` whether any
+        of them holds one.  ``members``: the ``p``-members to report
+        (closure rollup, one pass over the rows), or ``None`` for the
+        stored leaves (every row is its own entry)."""
+        keep = np.flatnonzero(self._under(dims, rest))
+        pid = self.ids[p][keep].astype(np.int64)
+        _, first, group = np.unique(
+            self.codes[keep] - pid * self.strides[p],
+            return_index=True, return_inverse=True,
+        )
+        values, valued = self.values[keep], ~self.null[keep]
+        if members is None:
+            member, total, present = pid, values, valued
+        else:
+            members = np.asarray(members, dtype=np.int64)
+            pairs = self._closure(dims[p]).pairs(members, int(self.radix[p]))
+            src, slot, w = _fan_out(pid, pairs, int(self.radix[p]))
+            key, at = np.unique(
+                group[src] * len(members) + slot, return_inverse=True
+            )
+            group, member = key // len(members), members[key % len(members)]
+            total = np.bincount(
+                at, weights=values[src] * w, minlength=len(key)
+            )
+            present = np.bincount(
+                at, weights=valued[src], minlength=len(key)
+            ) > 0
+        fed = np.unique(group[member == feeder])
+        renum = np.full(len(first), -1, dtype=np.int64)
+        renum[fed] = np.arange(len(fed))
+        group = renum[group]
+        e = group >= 0
+        return (
+            self.ids[:, keep[first[fed]]], group[e], member[e], total[e],
+            present[e],
+        )
 
     def _closure(self, dim: Dimension) -> _Closure:
         key = (dim.uid, dim.version)
@@ -291,26 +385,10 @@ class LocalFact:
         key = np.zeros(ids.shape[1], dtype=np.int64)
         weight = None
         for i, anc, (m, slot, w) in steps:
-            radix = int(self.radix[i])
             col = ids[i] if rows is None else ids[i][rows]
-            deg = np.bincount(m, minlength=radix)
-            if len(m) and deg.max() > 1:
-                # a member under several requested ancestors: one pair
-                # per (row, ancestor)
-                cnt = deg[col]
-                src = np.repeat(np.arange(len(col)), cnt)
-                first = np.repeat(np.cumsum(cnt) - cnt, cnt)
-                at = np.repeat((np.cumsum(deg) - deg)[col], cnt)
-                at += np.arange(len(src)) - first
-                slot_at, w_at = slot[at], w[at]
-            else:
-                slot_of = np.full(radix, -1, dtype=np.int64)
-                slot_of[m] = slot
-                w_of = np.zeros(radix)
-                w_of[m] = w
-                s_col = slot_of[col]
-                src = np.flatnonzero(s_col >= 0)
-                slot_at, w_at = s_col[src], w_of[col[src]]
+            src, slot_at, w_at = _fan_out(
+                col, (m, slot, w), int(self.radix[i])
+            )
             rows = src if rows is None else rows[src]
             key = key[src] * len(anc) + slot_at
             weight = w_at if weight is None else weight[src] * w_at

@@ -151,7 +151,7 @@ class Query:
 
         # ---- one batch read of the dense product -------------------------
         positions = list(range(len(cube.dimensions)))
-        values, _ = cube._read_grid([member_lists[p] for p in positions])
+        values, _, _ = cube._read_grid([member_lists[p] for p in positions])
 
         self.column_names = []
         for kind, payload in fields:

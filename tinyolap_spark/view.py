@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import engine
-from .cube import _RULE_SCOPES, Cube
+from .cube import Cube
 from .metadata import InvalidAddressError, Member
 
 
@@ -145,14 +145,12 @@ class View:
         members: list[Sequence[int]] = [[] for _ in cube.dimensions]
         for pos, idxs in self._axes():
             members[pos] = idxs
-        values, tier = cube._read_grid(members)
+        values, tier, n_rules = cube._read_grid(members)
         self._grid = {}
-        n_rules = 0
         for addr in itertools.product(*members):
             rpos = tuple(addr[p] for p in row_dims)
             cpos = tuple(addr[p] for p in col_dims)
             self._grid[(rpos, cpos)] = values[addr]
-            n_rules += cube.rules.match(addr, _RULE_SCOPES) is not None
         self.stats = {
             "refresh_sec": time.time() - t0,
             "rows": len(self.row_axis),
