@@ -39,11 +39,23 @@ Each shape runs once untimed first (Spark's closure frames, the copy's
 closure tables); both tiers' answers and rule paths are checked against
 each other.
 
+With ``--writes`` it times the write path on the same rules model, the
+copy as the store of record (``LocalFact.patched``) against forced Spark
+(``Cube._merge``: anti-join, union, checkpoint):
+
+- ``ryw``: ``cube[leaf, region, "Quantity"] = v``, then a ``get_many`` of
+  the written leaf, its group and the top (read-your-write);
+- ``bulk``: one ``write_rows`` of 1,000 random stored cells, then a read
+  of the top (the write is flushed).
+
+Every readback is checked against a numpy oracle of the stored cells.
+
 Usage (from the repository root, ~5 min on 4 cores for cell reads)::
 
     python scripts/local_tier_crossover.py                 # 100k 300k 1M 3M
     python scripts/local_tier_crossover.py 100000 300000   # chosen sizes
     python scripts/local_tier_crossover.py --rules         # rule tiers
+    python scripts/local_tier_crossover.py --writes        # write path
 
 Prints one markdown table row per size; ``local.CELL_LIMIT`` is set from
 these tables (ARCHITECTURE §5, "Read tiers").
@@ -83,13 +95,8 @@ def _status_mb(field: str) -> float:
     return float("nan")
 
 
-def measure(records: int) -> dict:
-    sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
+def _session():
     from pyspark.sql import SparkSession
-
-    from models import HUGE_DIMS, build_huge, huge_names, huge_records
-    from tinyolap_spark import engine, local
-    from workloads import _HugeAddresses
 
     n = len(os.sched_getaffinity(0))
     spark = (
@@ -99,9 +106,20 @@ def measure(records: int) -> dict:
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def measure(records: int) -> dict:
+    sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
+    from models import HUGE_DIMS, build_huge, huge_names, huge_records
+    from tinyolap_spark import engine, local
+    from workloads import _HugeAddresses
+
+    spark = _session()
     try:
         keys, values = huge_records(7, records)
         _db, cube = build_huge(spark, keys, values, name=f"cross{records}")
@@ -133,7 +151,9 @@ def measure(records: int) -> dict:
         build_s = time.perf_counter() - t0
         build_peak_mb = _status_mb("VmHWM") - rss0
         write = [tuple(shapes["base"][0]) + (1.0, None)]
-        patch_ms, _ = _median_ms(lambda: lf.patched(fact, write), COPY_REPS)
+        patch_ms, _ = _median_ms(
+            lambda: lf.patched(write, cube.dimensions), COPY_REPS
+        )
         row = {
             "records": records,
             "cells": cells,
@@ -190,62 +210,61 @@ def _logq(c):
         return math.log1p(q)
 
 
-def measure_rules(cells: int) -> dict:
-    sys.path[:0] = [ROOT]
+def _rules_model(spark, cells: int):
+    """The rules model at about ``cells`` stored cells: ``(cube,
+    per_group, values)``, ``values`` the loaded numbers shaped (key leaf,
+    region, stored measure)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import SparkSession
 
-    from tinyolap_spark import Database, local
+    from tinyolap_spark import Database
+
+    per_group = max(1, cells // (RULE_GROUPS * RULE_REGIONS * 3))
+    db = Database(f"rulecross{cells}", spark=spark)
+    keys = db.add_dimension("keys").edit()
+    for g in range(RULE_GROUPS):
+        keys.add_many(f"g{g}", [f"k{g}_{i}" for i in range(per_group)])
+    keys.add_many("AllKeys", [f"g{g}" for g in range(RULE_GROUPS)])
+    keys.commit()
+    regions = db.add_dimension("regions").edit()
+    regions.add_many("AllRegions", [f"r{i}" for i in range(RULE_REGIONS)])
+    regions.commit()
+    measures = db.add_dimension("measures").edit()
+    measures.add_many(list(RULE_STORED) + ["Sales", "LogQ"])
+    measures.commit()
+    cube = db.add_cube("rules", [keys, regions, measures])
+    kid = np.array([
+        keys.member(f"k{g}_{i}").index
+        for g in range(RULE_GROUPS) for i in range(per_group)
+    ], dtype=np.int32)
+    rid = np.array([
+        regions.member(f"r{i}").index for i in range(RULE_REGIONS)
+    ], dtype=np.int32)
+    mid = np.array([
+        measures.member(m).index for m in RULE_STORED
+    ], dtype=np.int32)
+    k_col = np.repeat(kid, len(rid) * len(mid))
+    r_col = np.tile(np.repeat(rid, len(mid)), len(kid))
+    m_col = np.tile(mid, len(kid) * len(rid))
+    values = np.random.default_rng(7).integers(1, 50, len(k_col)).astype(
+        np.float64
+    )
+    kc, rc, mc = cube.dim_cols
+    cube.load_dataframe(spark.createDataFrame(pd.DataFrame({
+        kc: k_col, rc: r_col, mc: m_col, "value": values,
+    })), assume_unique=True)
+    return cube, per_group, values.reshape(len(kid), len(rid), len(mid))
+
+
+def measure_rules(cells: int) -> dict:
+    sys.path[:0] = [ROOT]
+    from tinyolap_spark import local
     from tinyolap_spark.rules import RuleScope
 
-    n = len(os.sched_getaffinity(0))
-    spark = (
-        SparkSession.builder.master(f"local[{n}]")
-        .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.driver.memory", "3g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.executorEnv.PYTHONPATH", ROOT)
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session()
     try:
-        per_group = max(1, cells // (RULE_GROUPS * RULE_REGIONS * 3))
-        db = Database(f"rulecross{cells}", spark=spark)
-        keys = db.add_dimension("keys").edit()
-        for g in range(RULE_GROUPS):
-            keys.add_many(f"g{g}", [f"k{g}_{i}" for i in range(per_group)])
-        keys.add_many("AllKeys", [f"g{g}" for g in range(RULE_GROUPS)])
-        keys.commit()
-        regions = db.add_dimension("regions").edit()
-        regions.add_many("AllRegions", [f"r{i}" for i in range(RULE_REGIONS)])
-        regions.commit()
-        measures = db.add_dimension("measures").edit()
-        measures.add_many(list(RULE_STORED) + ["Sales", "LogQ"])
-        measures.commit()
-        cube = db.add_cube("rules", [keys, regions, measures])
-        kid = np.array([
-            keys.member(f"k{g}_{i}").index
-            for g in range(RULE_GROUPS) for i in range(per_group)
-        ], dtype=np.int32)
-        rid = np.array([
-            regions.member(f"r{i}").index for i in range(RULE_REGIONS)
-        ], dtype=np.int32)
-        mid = np.array([
-            measures.member(m).index for m in RULE_STORED
-        ], dtype=np.int32)
-        k_col = np.repeat(kid, len(rid) * len(mid))
-        r_col = np.tile(np.repeat(rid, len(mid)), len(kid))
-        m_col = np.tile(mid, len(kid) * len(rid))
-        rng = np.random.default_rng(7)
-        kc, rc, mc = cube.dim_cols
-        cube.load_dataframe(spark.createDataFrame(pd.DataFrame({
-            kc: k_col, rc: r_col, mc: m_col,
-            "value": rng.integers(1, 50, len(k_col)).astype(np.float64),
-        })), assume_unique=True)
-        del k_col, r_col, m_col
+        cube, _per_group, _values = _rules_model(spark, cells)
+        keys, regions, measures = cube.dimensions
         fact_cells = cube.fact.count()
         groups = [keys.member(f"g{g}").index for g in range(10)]
         top = [keys.member("AllKeys").index]
@@ -321,30 +340,98 @@ def measure_rules(cells: int) -> dict:
         spark.stop()
 
 
+WRITE_ROWS = 1000
+
+
+def measure_writes(cells: int) -> dict:
+    sys.path[:0] = [ROOT]
+    from tinyolap_spark import local
+
+    spark = _session()
+    try:
+        cube, per_group, values = _rules_model(spark, cells)
+        quantity = values[:, :, 0].copy()  # the oracle of Quantity
+        rng = random.Random(5)
+
+        def leaf():
+            g, i = rng.randrange(RULE_GROUPS), rng.randrange(per_group)
+            return g, i, rng.randrange(RULE_REGIONS)
+
+        def ryw():
+            g, i, r = leaf()
+            v = float(rng.randrange(1, 50))
+            cube[f"k{g}_{i}", f"r{r}", "Quantity"] = v
+            quantity[g * per_group + i, r] = v
+            got = cube.get_many([
+                (f"k{g}_{i}", f"r{r}", "Quantity"),
+                (f"g{g}", "AllRegions", "Quantity"),
+                ("AllKeys", "AllRegions", "Quantity"),
+            ])
+            group = quantity[g * per_group:(g + 1) * per_group].sum()
+            assert got == [v, group, quantity.sum()], "ryw: wrong readback"
+
+        def bulk():
+            rows = []
+            for _ in range(WRITE_ROWS):
+                g, i, r = leaf()
+                m = rng.randrange(len(RULE_STORED))
+                v = float(rng.randrange(1, 50))
+                rows.append((f"k{g}_{i}", f"r{r}", RULE_STORED[m], v))
+                if m == 0:
+                    quantity[g * per_group + i, r] = v
+            cube.write_rows(rows)
+            got = cube["AllKeys", "AllRegions", "Quantity"]
+            assert got == quantity.sum(), "bulk: wrong readback"
+
+        row = {"cells": cube.cells_count}
+        limit = local.CELL_LIMIT
+        for tier, reps in (("copy", COPY_REPS), ("spark", SPARK_REPS)):
+            if tier == "spark":
+                local.CELL_LIMIT = 0
+                cube._drop_copy()
+            else:
+                assert cube._local_copy() is not None
+            try:
+                for name, fn in (("ryw", ryw), ("bulk", bulk)):
+                    fn()  # untimed first
+                    row[f"{name}_{tier}_ms"], _ = _median_ms(fn, reps)
+            finally:
+                local.CELL_LIMIT = limit
+            assert (cube._local is None) == (tier == "spark")
+        for k, v in row.items():
+            if k.endswith("_ms"):
+                row[k] = round(v, 1) if k.endswith("copy_ms") else round(v)
+        return row
+    finally:
+        spark.stop()
+
+
 def main(argv) -> None:
-    rules = argv[:1] == ["--rules"]
-    if rules:
+    modes = {"--rules": measure_rules, "--writes": measure_writes}
+    mode = argv[0] if argv[:1] and argv[0] in modes else None
+    if mode:
         argv = argv[1:]
     if argv[:1] == ["--one"]:
-        fn = measure_rules if argv[2:] == ["rules"] else measure
+        fn = modes.get(argv[2] if argv[2:] else None, measure)
         print(json.dumps(fn(int(argv[1]))))
         return
     sizes = [int(a) for a in argv] or list(SIZES)
-    shapes = (
-        ("opaque", "compiled", "grid") if rules
-        else ("base", "drill1", "drill3", "point")
-    )
-    cols = (
-        ["cells", "key_leaves"] if rules
-        else ["records", "cells", "build_s", "copy_mb", "build_peak_mb",
-              "patch_ms"]
-    ) + [f"{s}_{t}_ms" for s in shapes for t in ("copy", "spark")]
+    shapes, cols = {
+        "--rules": (("opaque", "compiled", "grid"), ["cells", "key_leaves"]),
+        "--writes": (("ryw", "bulk"), ["cells"]),
+        None: (
+            ("base", "drill1", "drill3", "point"),
+            ["records", "cells", "build_s", "copy_mb", "build_peak_mb",
+             "patch_ms"],
+        ),
+    }[mode]
+    cols = cols + [f"{s}_{t}_ms" for s in shapes for t in ("copy", "spark")]
     print("| " + " | ".join(cols) + " |")
     print("|" + "---|" * len(cols))
     for size in sizes:
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--one", str(size)]
-            + (["rules"] if rules else []),
+            + ([mode] if mode else []),
             capture_output=True, text=True, check=True,
             env=dict(os.environ, PYTHONPATH=ROOT),
         ).stdout.strip().splitlines()[-1]

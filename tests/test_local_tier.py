@@ -4,8 +4,9 @@
 - differential: every read the copy answers equals the Spark engine's
   answer for the same cube (Spark forced by ``CELL_LIMIT = 0``);
 - coherence: read-your-write through the copy after every kind of fact
-  swap, a failed flush leaves reads on the old values, and single-cell
-  writes patch the copy instead of rebuilding it;
+  swap; cell writes patch the copy (the store of record) with no Spark
+  job, so a Spark failure cannot lose one, while on a cube without a copy
+  a failed Spark merge leaves reads on the old values;
 - undo/redo stale-mark summary frames (every fact swap goes through
   ``Cube._replace_fact``).
 """
@@ -31,13 +32,13 @@ def _same(got, want) -> bool:
 
 def _copy_vs_spark(cube, addresses, monkeypatch):
     """get_many(addresses) answered by the copy, then by Spark."""
-    cube._local = None
+    cube._drop_copy()
     cube._invalidate()
     got = cube.get_many(addresses)
     assert cube._local is not None and cube._local.fact is cube._fact
     with monkeypatch.context() as m:
         m.setattr(local, "CELL_LIMIT", 0)
-        cube._local = None
+        cube._drop_copy()
         cube._invalidate()
         want = cube.get_many(addresses)
         assert cube._local is None
@@ -293,7 +294,10 @@ ADDRS = [(a, b) for a in ("All", "a", "b", "c") for b in ("Total", "x", "y")]
 def _expect(cube, base):
     """Assert every cell against a dict of base values (weights are 1)."""
     got = cube.get_many(ADDRS)
-    assert cube._local is not None and cube._local.fact is cube._fact
+    if local.CELL_LIMIT:
+        # the copy is the store of record; the Spark fact derives from it
+        fact = cube._fact
+        assert cube._local is not None and cube._local.fact is fact
     for (a, b), g in zip(ADDRS, got):
         under = [
             v for (x, y), v in base.items()
@@ -348,36 +352,132 @@ def test_read_your_write_through_the_copy(spark, tmp_path):
     _expect(cube2, before_clear)
 
 
+def _boom(*_a, **_k):
+    raise RuntimeError("merge failed")
+
+
 def test_failed_flush_leaves_reads_on_old_values(spark, monkeypatch):
+    """A cube without a copy merges a cell write in Spark: a failed merge
+    raises at the read that flushes it, and the fact and every read stay
+    on the old values."""
+    monkeypatch.setattr(local, "CELL_LIMIT", 0)
     _db, cube = _coherence_cube(spark, "local_failed_flush")
     base = {("a", "x"): 1.0, ("b", "y"): 2.0, ("c", "x"): 3.0}
     _expect(cube, base)
     copy = cube._local
 
-    def boom(self, *a, **k):
-        raise RuntimeError("merge failed")
-
     with monkeypatch.context() as m:
-        m.setattr(type(cube._fact), "localCheckpoint", boom)
+        m.setattr(type(cube._fact), "localCheckpoint", _boom)
         cube["a", "x"] = 100.0
         with pytest.raises(RuntimeError, match="merge failed"):
             cube["All", "Total"]  # the read flushes the pending write
-    assert cube._local is copy  # not patched by the failed merge
+    assert cube._local is copy  # still no copy
+    _expect(cube, base)
+    assert cube.counter_local_builds == 0
+
+
+def test_spark_failure_cannot_lose_a_write_to_the_copy(spark, monkeypatch):
+    """While the copy is the store of record a write reaches no Spark
+    code: with the merge's localCheckpoint and createDataFrame raising,
+    cell writes and write_rows still land, whole, and read back."""
+    _db, cube = _coherence_cube(spark, "local_failed_spark")
+    base = {("a", "x"): 1.0, ("b", "y"): 2.0, ("c", "x"): 3.0}
+    _expect(cube, base)
+    with monkeypatch.context() as m:
+        m.setattr(type(cube._fact), "localCheckpoint", _boom)
+        m.setattr(type(spark), "createDataFrame", _boom)
+        cube["a", "x"] = 100.0
+        assert cube["All", "Total"] == 105.0
+        assert cube["a", "x"] == 100.0
+        cube.write_rows([("b", "x", 7.0), ("c", "x", None)])
+        assert cube.get_many([("All", "x"), ("All", "Total")]) == [107.0, 109.0]
+    base.update({("a", "x"): 100.0, ("b", "x"): 7.0})
+    del base[("c", "x")]
     _expect(cube, base)
     assert cube.counter_local_builds == 1
 
 
 def test_single_cell_writes_build_the_copy_once(spark):
+    """40 set+read cycles and a write_rows patch the copy: no Spark job,
+    and no cached block left behind per write."""
+    from test_rule_engine_fixes import _count_jobs
+
     _db, cube = _coherence_cube(spark, "local_forty")
     cube.reset_counters()
     total = 6.0
-    for i in range(40):
-        cube["b", "x"] = float(i)
-        expected = total + i
-        assert cube["All", "Total"] == expected
-        assert cube["b", "x"] == float(i)
+    assert cube["All", "Total"] == total  # builds the copy
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def cycles():
+        for i in range(40):
+            cube["b", "x"] = float(i)
+            expected = total + i
+            assert cube["All", "Total"] == expected
+            assert cube["b", "x"] == float(i)
+        cube.write_rows([("a", "y", 1.0), ("c", "y", 2.0)])
+        assert cube["All", "Total"] == total + 39 + 3
+
+    _, jobs = _count_jobs(spark, "local-forty", cycles)
+    assert jobs == 0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= persisted
     assert cube.counter_local_builds == 1
     assert cube.counter_local_cells >= 40
+
+
+def test_write_to_a_member_added_after_the_build(spark):
+    """A member added after the copy was built grows the copy's radix: the
+    write and its rollups read back without rebuilding the copy and
+    without a Spark job."""
+    from test_rule_engine_fixes import _count_jobs
+
+    db, cube = _coherence_cube(spark, "local_new_member")
+    assert cube["All", "Total"] == 6.0  # builds the copy
+    cube.write_rows([("a", "y", "text")])  # a string cell is re-encoded
+    d1 = db.dimension("d1").edit()
+    d1.add_many("All", ["d"])
+    d1.commit()
+    d2 = db.dimension("d2").edit()
+    d2.add_many("Total", ["z"])
+    d2.commit()
+
+    def write_and_read():
+        cube["d", "z"] = 4.0
+        return cube.get_many(
+            [("d", "z"), ("d", "Total"), ("All", "z"), ("All", "Total"),
+             ("a", "y"), ("c", "x")]
+        )
+
+    got, jobs = _count_jobs(spark, "local-new-member", write_and_read)
+    assert got == [4.0, 4.0, 4.0, 10.0, "text", 3.0]
+    assert jobs == 0
+    assert cube.counter_local_builds == 1
+
+
+def test_get_many_reads_each_cell_once_with_caching_off(spark, monkeypatch):
+    """With the cell cache off, get_many answers from the batch it
+    prefetched instead of reading every cell again one by one."""
+    from conftest import each_read_tier
+
+    for tier in each_read_tier(monkeypatch):
+        db = Database(f"local_nocache_{tier}", spark=spark)
+        d1 = _dim(db, "d1", [("All", ["a", "b"])])
+        d2 = _dim(db, "d2", [("Total", ["x", "y"])])
+        cube = db.add_cube("c", [d1, d2])
+        cube.write_rows([("a", "x", 1.0), ("b", "y", 2.0)])
+        cube.caching = False
+        read = []
+        for name in ("_base_values", "_aggregate_values"):
+            orig = getattr(cube, name)
+            monkeypatch.setattr(
+                cube, name,
+                lambda addrs, _orig=orig: read.extend(addrs) or _orig(addrs),
+            )
+        addrs = [(a, b) for a in ("All", "a", "b") for b in ("Total", "x", "y")]
+        got = cube.get_many(addrs)
+        assert got == [3.0, 1.0, 2.0, 1.0, 1.0, None, 2.0, None, 2.0]
+        assert len(read) == 9, tier
+        assert cube.counter_local_cells == (9 if tier == "copy" else 0)
+        assert cube._cache == {}
 
 
 def test_fact_over_the_limit_is_never_collected(spark, monkeypatch):

@@ -342,3 +342,146 @@ def test_history_pending_value_validated_at_save(spark, tmp_path):
     db.history._undo[-1] = (c, fact, {(0,): object()})
     with pytest.raises(TinyOlapError, match="non-persistable"):
         db.save(str(tmp_path / "hist_bad"))
+
+
+# ------------------------------------------------ history round trips
+_LEAVES = [(a, b) for a in ("a", "b", "c") for b in ("x", "y")]
+_CELLS = [(a, b) for a in ("All", "a", "b", "c") for b in ("Total", "x", "y")]
+
+
+def _oracle_cell(base, addr):
+    """A cell of a cube whose stored cells are ``base`` (weights 1)."""
+    a, b = addr
+    if a != "All" and b != "Total":
+        return base.get(addr)
+    under = [
+        v for (x, y), v in base.items()
+        if a in ("All", x) and b in ("Total", y)
+    ]
+    if not under:
+        return None
+    return sum(v for v in under if not isinstance(v, str))
+
+
+def _check(cubes, state, label):
+    for cube, base in zip(cubes, state):
+        cube._invalidate()
+        got = cube.get_many(_CELLS)
+        want = [_oracle_cell(base, c) for c in _CELLS]
+        assert got == want, (label, cube.name, got, want)
+
+
+def _history_files(path):
+    root = os.path.join(path, "history")
+    if not os.path.isdir(root):
+        return []
+    return [
+        os.path.join(c, v) for c in os.listdir(root)
+        for v in os.listdir(os.path.join(root, c)) if v.endswith(".parquet")
+    ]
+
+
+def test_history_round_trips_against_a_dict_oracle(spark, tmp_path):
+    """Interleaved set / write_rows / load_dataframe / area ops on two
+    cubes: every undo and redo, before and after save/open, lands on the
+    state a dict oracle recorded.  Cell writes on a copy-backed cube are
+    cell entries (JSON before-images); only whole-fact ops and writes to
+    a cube without a copy write a fact-version parquet file."""
+    db = Database("hist_rt", spark=spark)
+    d1 = db.add_dimension("d1").edit()
+    d1.add_many("All", ["a", "b", "c"])
+    d1.commit()
+    d2 = db.add_dimension("d2").edit()
+    d2.add_many("Total", ["x", "y"])
+    d2.commit()
+    c1, c2 = db.add_cube("c1", [d1, d2]), db.add_cube("c2", [d1, d2])
+    cubes = (c1, c2)
+    state = ({}, {})
+    states = [state]
+
+    def step(cube_i, fn, change):
+        nonlocal state
+        fn()
+        base = dict(state[cube_i])
+        for addr, v in change.items():
+            if v is None:
+                base.pop(addr, None)
+            else:
+                base[addr] = v
+        state = tuple(base if i == cube_i else s for i, s in enumerate(state))
+        states.append(state)
+        _check(cubes, state, f"step {len(states) - 1}")  # builds the copies
+
+    # cell entries only: c1 and c2 start empty, their copies are built by
+    # the first check, so every write below is captured as before-images
+    _check(cubes, state, "empty")
+    step(0, lambda: c1.write_rows([("a", "x", 1.0), ("b", "y", 2.0)]),
+         {("a", "x"): 1.0, ("b", "y"): 2.0})
+    step(1, lambda: c2.__setitem__(("c", "x"), 3.0), {("c", "x"): 3.0})
+    step(0, lambda: c1.__setitem__(("a", "x"), 5.0), {("a", "x"): 5.0})
+    step(1, lambda: c2.write_rows([("a", "y", "note"), ("c", "x", None)]),
+         {("a", "y"): "note", ("c", "x"): None})
+    cell_only = str(tmp_path / "cells")
+    db.save(cell_only)
+    assert _history_files(cell_only) == []
+    assert len(db.history) == 4
+
+    # whole-fact ops: snapshot entries, one parquet version each
+    pdf = spark.createDataFrame(
+        [("b", "x", 4.0), ("c", "y", 6.0)], ["d1", "d2", "value"]
+    )
+    step(0, lambda: c1.load_dataframe(pdf, by_name=True),
+         {("b", "x"): 4.0, ("c", "y"): 6.0})
+    step(1, lambda: c2.__setitem__(("b", "x"), 7.0), {("b", "x"): 7.0})
+    step(0, lambda: c1.area("c").set_value(9.0), {("c", "y"): 9.0})
+    step(0, lambda: c1.__delitem__(("b", "y")), {("b", "y"): None})
+    step(1, lambda: c2.area("a").clear(), {("a", "y"): None})
+
+    # undo everything, one step at a time, then redo half of it
+    for k in range(len(states) - 1, 0, -1):
+        assert db.history.undo() == 1
+        _check(cubes, states[k - 1], f"undo to {k - 1}")
+    assert not db.history.can_undo
+    assert db.history.redo(5) == 5
+    _check(cubes, states[5], "redo to 5")
+
+    path = str(tmp_path / "mixed")
+    db.save(path)
+    # undo entries 1-5 (c1's load is the only whole-fact op among them)
+    # and redo entries 6-9 (the two area ops); c1's first write_rows ran
+    # on a cube with a copy, so it too is a cell entry
+    assert len(_history_files(path)) == 3
+
+    db2 = Database.open(path, spark=spark)
+    k1, k2 = db2.cube("c1"), db2.cube("c2")
+    cubes = (k1, k2)
+    _check(cubes, states[5], "reopened")
+    for k in range(5, 0, -1):
+        assert db2.history.undo() == 1
+        _check(cubes, states[k - 1], f"reopened undo to {k - 1}")
+    assert db2.history.redo(9) == 9
+    _check(cubes, states[9], "reopened redo to 9")
+
+
+def test_encrypted_save_keeps_history_images_secret(spark, tmp_path):
+    """A cell entry's before-images reach database.json only encrypted
+    when a password is given, and decrypt again on open."""
+    db = Database("hist_enc", spark=spark)
+    d = db.add_dimension("d").edit()
+    d.add_many("All", ["a", "b"])
+    d.commit()
+    cube = db.add_cube("c", [d])
+    cube.write_rows([("a", 27182.5), ("b", "secret note")])
+    assert cube[("All",)] == 27182.5  # builds the copy: cell entries next
+    cube[("a",)] = 1.0
+    cube[("b",)] = 2.0
+    path = str(tmp_path / "enc_hist")
+    db.save(path, password="pw")
+    with open(os.path.join(path, "database.json")) as f:
+        text = f.read()
+    assert "27182" not in text and "secret note" not in text
+    db2 = Database.open(path, spark=spark, password="pw")
+    c2 = db2.cube("c")
+    assert c2[("All",)] == 3.0
+    assert db2.history.undo(2) == 2
+    assert c2[("a",)] == 27182.5 and c2[("b",)] == "secret note"

@@ -515,12 +515,14 @@ class Cube:
                 StructField("value_str", StringType(), True),
             ]
         )
-        self._fact: DataFrame = spark.createDataFrame([], schema=self._schema)
+        self._df: DataFrame = spark.createDataFrame([], schema=self._schema)
         self._fact_is_persisted = False
         self._pending: dict[tuple[int, ...], Any] = {}
-        # driver copy of a small fact (local.LocalFact, mirrors exactly
-        # self._fact) and, for a fact not copied, (fact, a lower bound of
-        # its cell count) so it is not counted again
+        # the driver copy of a small fact (local.LocalFact): once built it
+        # is the store of record and the Spark fact derives from it
+        # (``_fact``); ``_df`` is the Spark fact of a cube without one.
+        # For a fact not copied, (fact, a lower bound of its cell count)
+        # so it is not counted again
         self._local: Optional[local.LocalFact] = None
         self._local_over: Optional[tuple[DataFrame, int]] = None
         self.rules = RuleRegistry()
@@ -625,55 +627,104 @@ class Cube:
             return merged.localCheckpoint(eager=True), True
         return merged, False
 
+    @property
+    def _fact(self) -> DataFrame:
+        """The Spark fact, pending writes excluded: the one accessor of
+        every Spark consumer.  While the driver copy is the store of
+        record the frame is derived state, built from the copy at most
+        once per copy version (`LocalFact.frame`, no Spark job)."""
+        lf = self._local
+        if lf is None:
+            return self._df
+        if lf.fact is None:
+            lf.fact = lf.frame(self.spark, self._schema)
+        return lf.fact
+
+    @property
+    def _built_fact(self) -> "Optional[DataFrame]":
+        """The Spark fact if one exists now, without deriving it."""
+        lf = self._local
+        return self._df if lf is None else lf.fact
+
     def _replace_fact(
         self,
         df: DataFrame,
         persist: bool = True,
         written: "Optional[Sequence[tuple]]" = None,
     ) -> None:
-        """Every fact swap goes through here (writes, loads, area ops,
-        ``clear``, undo/redo, save/open): it clears the cell cache,
-        stale-marks the summaries and moves the driver copy along.
-        ``written``: the ``(*ids, value, value_str)`` rows a successful
-        merge applied on top of the outgoing fact — the copy is patched
-        with them; any other swap drops it (the next read rebuilds)."""
-        old = self._fact
-        lf, over = self._local, self._local_over
+        """Every Spark fact swap goes through here (Spark merges, loads,
+        area ops, ``clear``, snapshot undo/redo, open): ``df`` becomes the
+        store of record, the driver copy is dropped (the next read
+        rebuilds it from ``df``) and the cell cache and summaries are
+        invalidated.  ``written``: the rows a merge applied on top of an
+        outgoing fact known to be over ``local.CELL_LIMIT``, so that the
+        new one is not counted again while it stays over."""
+        old = self._built_fact
+        over = self._local_over
         self._local_over = None
-        if written is not None and lf is not None and lf.fact is old:
-            lf = lf.patched(df, written)
-            if lf is not None and len(lf.codes) > local.CELL_LIMIT:
-                lf, self._local_over = None, (df, len(lf.codes))
-        else:
-            lf = None
-            if written is not None and over is not None and over[0] is old:
-                # still over the limit: a merge drops at most one stored
-                # row per written row
-                if over[1] - len(written) > local.CELL_LIMIT:
-                    self._local_over = (df, over[1] - len(written))
-        self._fact = df
-        self._local = lf
+        if (
+            written is not None and over is not None and over[0] is old
+            # a merge drops at most one stored row per written row
+            and over[1] - len(written) > local.CELL_LIMIT
+        ):
+            self._local_over = (df, over[1] - len(written))
+        self._df, self._local = df, None
         if persist:
-            self._fact.persist()
+            df.persist()
             self._fact_is_persisted = True
-        if old is not None and self._fact_is_persisted:
-            # history entries hold replaced facts by reference — tearing
-            # down their cached/checkpoint blocks would corrupt undo
-            if not (self._history is not None and self._history.holds(old)):
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
+        self._release(old)
+        self._changed()
+
+    def _release(self, frame: "Optional[DataFrame]") -> None:
+        """Unpersist a Spark fact the cube no longer reads, unless a
+        history entry still holds it: tearing down its cached or
+        checkpoint blocks would corrupt undo."""
+        if (
+            frame is None
+            or frame is self._built_fact
+            or not self._fact_is_persisted
+            or (self._history is not None and self._history.holds(frame))
+        ):
+            return
+        try:
+            frame.unpersist()
+        except Exception:  # noqa: BLE001 — best-effort cache release
+            pass
+
+    def _changed(self) -> None:
+        """The stored cells changed: clear the cell cache and stale-mark
+        the summaries (specs survive, the frames rebuild lazily on the
+        next eligible rollup)."""
         self._invalidate()
-        # summaries derive from the fact: mark stale (specs survive, the
-        # frames rebuild lazily on next eligible rollup)
-        for s in getattr(self, "_summaries", []):
+        for s in self._summaries:
             if s.get("df") is not None:
                 try:
                     s["df"].unpersist()
                 except Exception:
                     pass
                 s["df"] = None
+
+    def _drop_copy(self) -> None:
+        """Hand the store of record from the driver copy to the Spark fact
+        (derived from the copy if need be); the next read rebuilds the
+        copy from it, or stays on Spark when it no longer qualifies."""
+        if self._local is not None:
+            self._replace_fact(self._fact, persist=False)
+
+    def _detached_fact(self) -> DataFrame:
+        """The flushed Spark fact, cut from its lineage so that writing it
+        may overwrite the files it was read from (open, modify, save to the
+        same path): a frame freshly derived from the copy, else an eager
+        localCheckpoint."""
+        self._flush()
+        lf = self._local
+        if lf is None:
+            fact = self._df.localCheckpoint(eager=True)
+            self._replace_fact(fact, persist=False, written=())
+            return fact
+        old, lf.fact = lf.fact, lf.frame(self.spark, self._schema)
+        self._release(old)
+        return lf.fact
 
     def _local_copy(self) -> "Optional[local.LocalFact]":
         """The driver copy of the (flushed) fact, built on first use, or
@@ -683,10 +734,10 @@ class Cube:
         navigation routes their rollups)."""
         if self._summaries:
             return None
-        fact = self._fact
         lf = self._local
-        if lf is not None and lf.fact is fact:
+        if lf is not None:
             return lf
+        fact = self._df
         over = self._local_over
         if (over is not None and over[0] is fact) or not local.eligible(
             self.dimensions
@@ -702,7 +753,8 @@ class Cube:
             self._local_over = (fact, cells)
             return None
         self.counter_local_builds += 1
-        if self._fact is fact:  # a concurrent write may have swapped it
+        # a concurrent write may have swapped the fact
+        if self._df is fact and self._local is None:
             self._local = lf
         return lf
 
@@ -1015,10 +1067,10 @@ class Cube:
         self._cache.clear()
 
     def _flush(self) -> None:
+        """Apply the pending cell writes."""
         if not self._pending:
             return
-        pending = self._pending
-        self._pending = {}
+        pending, self._pending = self._pending, {}
         rows = []
         for addr, v in pending.items():
             if v is None:
@@ -1027,16 +1079,78 @@ class Cube:
                 rows.append(tuple(addr) + (None, v))
             else:
                 rows.append(tuple(addr) + (float(v), None))
-        new = self.spark.createDataFrame(rows, schema=self._schema)
-        keep = self._fact.join(new.select(*self._cols), on=self._cols, how="left_anti")
+        # cut lineage so thousands of interactive writes don't stack plans
+        self._apply(rows, checkpoint=True)
+
+    def _apply(self, rows: "Sequence[tuple]", checkpoint: bool) -> None:
+        """Write ``(*ids, value, value_str)`` rows; one holding neither a
+        value nor a string deletes its cell.  While the driver copy is
+        the store of record the rows fold into a new copy and no Spark job
+        runs; a copy that would outgrow ``local.CELL_LIMIT`` (or a 62-bit
+        address code) hands the record to a derived Spark fact first.
+        Without a copy, one Spark `_merge`."""
+        lf = self._local
+        if lf is not None:
+            new = lf.patched(rows, self.dimensions)
+            if new is not None and len(new.codes) <= local.CELL_LIMIT:
+                self._local = new
+                self._release(lf.fact)
+                self._changed()
+                return
+            if new is not None:  # grown past the limit: Spark takes over
+                df = new.frame(self.spark, self._schema)
+                self._replace_fact(df, persist=False)
+                self._local_over = (df, len(new.codes))
+                return
+            self._drop_copy()
+        self._merge(
+            self.spark.createDataFrame(rows, schema=self._schema),
+            checkpoint, written=rows,
+        )
+
+    def _merge(
+        self,
+        new: DataFrame,
+        checkpoint: bool = False,
+        written: "Optional[Sequence[tuple]]" = None,
+    ) -> None:
+        """The Spark write path of a cube without a driver copy: the rows
+        of ``new`` (fact schema) replace every stored row at their
+        addresses; a row holding neither a value nor a string only
+        deletes (a ``(None, None)`` tombstone would inflate
+        ``cells_count`` and make rollups read 0.0 where the reference
+        reads an empty cell).  ``checkpoint``: cut the lineage with an
+        eager localCheckpoint now, else every
+        ``FACT_AUTO_COMPACT_EVERY``-th merge does (`_maybe_compact_fact`).
+        ``written``: see `_replace_fact`."""
+        keep = self._fact.join(
+            new.select(*self._cols), on=self._cols, how="left_anti"
+        )
         inserts = new.where(
             F.col("value").isNotNull() | F.col("value_str").isNotNull()
         )
         merged = keep.unionByName(inserts)
-        # cut lineage so thousands of interactive writes don't stack plans
-        merged = merged.localCheckpoint(eager=True)
-        self._fact_folds = 0  # fact is flat again: restart the fold count
-        self._replace_fact(merged, persist=False, written=rows)
+        if checkpoint:
+            merged, ckpt = merged.localCheckpoint(eager=True), True
+            self._fact_folds = 0  # fact is flat again: restart the fold count
+        else:
+            merged, ckpt = self._maybe_compact_fact(merged)
+        self._replace_fact(merged, persist=not ckpt, written=written)
+
+    def _stored(
+        self, addrs: "Iterable[tuple[int, ...]]"
+    ) -> "dict[tuple[int, ...], Any]":
+        """What the base cells at ``addrs`` hold now, pending writes
+        included: the before- and after-images of history's cell
+        entries."""
+        addrs = list(dict.fromkeys(addrs))
+        out = {a: self._pending[a] for a in addrs if a in self._pending}
+        rest = dict(enumerate(a for a in addrs if a not in out))
+        if rest:
+            lf = self._local
+            got = lf.base(rest) if lf is not None else self._base_values(rest)
+            out.update((a, got[i]) for i, a in rest.items())
+        return out
 
     # -------------------------------------------------------------- writes
     def set(self, address: Sequence, value: Any) -> None:
@@ -1061,7 +1175,8 @@ class Cube:
         if isinstance(value, int) and not isinstance(value, bool):
             value = float(value)  # reference cube.py:515-516
         if self._history is not None:
-            self._history.capture(self)  # one undo step per cell write
+            # one undo step per cell write
+            self._history.capture(self, [idx_address])
         self._pending[idx_address] = value
         self._invalidate()
         # ON_ENTRY push rules (reference cube.py:526-537): the reference
@@ -1128,8 +1243,6 @@ class Cube:
         self, rows: Iterable[Sequence], last_write_wins: bool = True
     ) -> None:
         """Bulk write of (member_name..., value) tuples in ONE merge."""
-        if self._history is not None:
-            self._history.capture(self)
         resolved = []
         for r in rows:
             *addr, value = r
@@ -1144,21 +1257,13 @@ class Cube:
                 resolved.append(tuple(idx_address) + (None, value))
             else:
                 resolved.append(tuple(idx_address) + (value, None))
+        nd = len(self._cols)
         if last_write_wins:
-            dedup: dict[tuple, tuple] = {}
-            for row in resolved:
-                dedup[row[: len(self._cols)]] = row
-            resolved = list(dedup.values())
-        new = self.spark.createDataFrame(resolved, schema=self._schema)
-        keep = self._fact.join(new.select(*self._cols), on=self._cols, how="left_anti")
-        # None values delete the cell (mirror _flush): inserting a
-        # (None, None) tombstone would inflate cells_count and make rollups
-        # report 0.0 where the reference reports an empty cell.
-        inserts = new.where(
-            F.col("value").isNotNull() | F.col("value_str").isNotNull()
-        )
-        merged, ckpt = self._maybe_compact_fact(keep.unionByName(inserts))
-        self._replace_fact(merged, persist=not ckpt, written=resolved)
+            resolved = list({row[:nd]: row for row in resolved}.values())
+        if self._history is not None:
+            self._history.capture(self, [row[:nd] for row in resolved])
+        self._flush()  # earlier cell writes land first
+        self._apply(resolved, checkpoint=False)
 
     def load_dataframe(
         self,
@@ -1278,9 +1383,7 @@ class Cube:
                 s["df"] = new
                 s["rows"] = rows
         else:
-            keep = base.join(df.select(*self._cols), on=self._cols, how="left_anti")
-            merged, ckpt = self._maybe_compact_fact(keep.unionByName(df))
-            self._replace_fact(merged, persist=not ckpt)
+            self._merge(df)
 
     # --------------------------------------------------------------- reads
     def get(self, address: Sequence) -> Any:
@@ -1304,7 +1407,12 @@ class Cube:
         Spark job, else in Spark jobs of their own."""
         idxs = [self._resolve_address(a)[0] for a in addresses]
         self._prefetch(idxs)
-        return [self._get_idx(i) for i in idxs]
+        try:
+            return [self._get_idx(i) for i in idxs]
+        finally:
+            if not self.caching:
+                # the batch answered this call's reads, and only them
+                self._cache.clear()
 
     def _base_values(
         self, addresses: "dict[int, tuple[int, ...]]"
@@ -1587,7 +1695,9 @@ class Cube:
         if idx_address in self._pending:
             v = self._pending[idx_address]
             return v
-        if use_cache and self.caching and idx_address in self._cache:
+        # with caching off the cache holds only what `_prefetch` batch-read
+        # (get_many clears it after the call, a write clears it too)
+        if use_cache and idx_address in self._cache:
             self.counter_cache_hits += 1
             return self._cache[idx_address]
         v = self._base_values({0: idx_address})[0]
@@ -1598,7 +1708,7 @@ class Cube:
     def _read_aggregate(
         self, idx_address: tuple[int, ...], use_cache: bool = True
     ) -> Any:
-        if use_cache and self.caching and idx_address in self._cache:
+        if use_cache and idx_address in self._cache:
             self.counter_cache_hits += 1
             return self._cache[idx_address]
         v = self._aggregate_values({0: idx_address})[0]
@@ -2319,7 +2429,9 @@ class Cube:
     # ---------------------------------------------------------------- info
     @property
     def cells_count(self) -> int:
-        return self.fact.count()
+        self._flush()
+        lf = self._local
+        return len(lf.codes) if lf is not None else self._df.count()
 
     def __len__(self) -> int:
         return self.cells_count

@@ -39,7 +39,7 @@ class Database:
         self.cubes: dict[str, Cube] = {}
         # undo/redo over cube mutations (reference history.py; S7) — see
         # tinyolap_spark/history.py; save() persists the most recent
-        # `history_persist_depth` undo versions per cube (reference
+        # `history_persist_depth` undo and redo entries per cube (reference
         # HistoryMode.PERSIST, storage/sqlite.py:208-291)
         from .history import History
 
@@ -272,9 +272,8 @@ class Database:
         for cube in self.cubes.values():
             for col, d in cube._dims_spec():
                 if d is dim:
-                    cube._flush()
                     cube._replace_fact(
-                        cube._fact.where(F.col(col).isin(valid))
+                        cube.fact.where(F.col(col).isin(valid))
                     )
 
     # ------------------------------------------------------- persistence
@@ -374,14 +373,16 @@ class Database:
                 "check": check,
             }
         # Persistent undo (reference PERSIST mode, storage/sqlite.py:208-291
-        # command log): each retained undo entry is a full fact VERSION —
-        # the Spark-native shape of a command log is table time travel, so
-        # save() materializes the most recent `history_persist_depth`
-        # versions per cube and open() restores the stack lazily.  Written
-        # BEFORE the fact overwrite (version plans may still read the
-        # destination parquet after an open-modify-save cycle), and the
-        # in-memory entry swaps to the written file so later in-session
-        # undo never replays a plan over overwritten data.
+        # command log): save() keeps the most recent
+        # `history_persist_depth` entries per cube.  A cell entry is its
+        # before-images, stored as JSON in database.json.  A snapshot entry
+        # is a full fact VERSION — the Spark-native shape of a command log
+        # is table time travel — written as parquet and read back lazily on
+        # open.  Versions are written BEFORE the fact overwrite (their
+        # plans may still read the destination parquet after an
+        # open-modify-save cycle), and the in-memory entry swaps to the
+        # written file so later in-session undo never replays a plan over
+        # overwritten data.
         hist_meta: dict[str, list] = {}
         redo_meta: dict[str, list] = {}
         token = secrets.token_hex(4)  # unique per save: a version file is
@@ -402,6 +403,17 @@ class Database:
                 items = []
                 for i, (j, fact, pending) in enumerate(entries):
                     self._validate_pending(cube, pending)
+                    # global LIFO position within its stack — open()
+                    # re-appends entries in seq order so cross-cube
+                    # interleaving survives the round trip (the reference
+                    # command log preserves global order)
+                    item = {"seq": j}
+                    images = [[list(addr), v] for addr, v in pending.items()]
+                    items.append(item)
+                    if fact is None:
+                        item["cells"] = images
+                        continue
+                    item["pending"] = images
                     rel = os.path.join(
                         "history",
                         cube.name.lower(),
@@ -416,21 +428,10 @@ class Database:
                         key,
                     )
                     stack[j] = (cube, reloaded, dict(pending))
-                    items.append(
-                        {
-                            "file": rel,
-                            # global LIFO position within its stack — open()
-                            # re-appends entries in seq order so cross-cube
-                            # interleaving survives the round trip (the
-                            # reference command log preserves global order)
-                            "seq": j,
-                            "pending": [
-                                [list(addr), v] for addr, v in pending.items()
-                            ],
-                        }
-                    )
+                    item["file"] = rel
                 if items:
                     out_meta[cube.name.lower()] = items
+        self._crypt_images((hist_meta, redo_meta), key)
         if hist_meta:
             meta["history"] = hist_meta
         if redo_meta:
@@ -441,9 +442,7 @@ class Database:
             # still scans the destination parquet, and Spark refuses to
             # overwrite a path it is reading from (open -> modify -> save
             # to the same path is the reference's routine workflow).
-            fact = cube.fact.localCheckpoint(eager=True)
-            cube._replace_fact(fact, persist=False, written=())
-            out = self._enc_fact(cube, fact, key)
+            out = self._enc_fact(cube, cube._detached_fact(), key)
             writer = out.write.mode("overwrite")
             pcol = (partition_by or {}).get(cube.name.lower())
             if pcol:
@@ -461,7 +460,8 @@ class Database:
 
     @staticmethod
     def _validate_pending(cube, pending: dict) -> None:
-        """Persisted history pending values must round-trip JSON exactly
+        """Persisted history cell values (a snapshot's pending writes, a
+        cell entry's images) must round-trip JSON exactly
         (float/int/str/bool/None); anything else fails loudly at save()."""
         for addr, v in pending.items():
             if v is not None and not isinstance(v, (int, float, str, bool)):
@@ -470,6 +470,41 @@ class Database:
                     f"non-persistable type {type(v).__name__} "
                     f"(float/int/str/bool/None only)"
                 )
+
+    def _crypt_images(
+        self, metas: "Sequence[dict]", key: Optional[str], decrypt=False
+    ) -> None:
+        """AES-GCM-encrypt in place the cell values of persisted history
+        items (a cell entry's images, a snapshot's pending writes), so that
+        with a password no value reaches database.json in cleartext; with
+        ``decrypt``, the inverse.  One Spark job for all items."""
+        from pyspark.sql import functions as F
+
+        if key is None:
+            return
+        items = [
+            (item, k)
+            for meta in metas
+            for cube_items in meta.values()
+            for item in cube_items
+            for k in ("cells", "pending")
+            if isinstance(item.get(k), str if decrypt else list)
+        ]
+        if not items:
+            return
+        expr = (
+            f"cast(aes_decrypt(unbase64(t), unhex('{key}'), 'GCM') as string)"
+            if decrypt
+            else f"base64(aes_encrypt(t, unhex('{key}'), 'GCM'))"
+        )
+        texts = [item[k] if decrypt else json.dumps(item[k]) for item, k in items]
+        out = (
+            self.spark.createDataFrame([(t,) for t in texts], "t string")
+            .select(F.expr(expr).alias("t"))
+            .collect()
+        )
+        for (item, k), row in zip(items, out):
+            item[k] = json.loads(row["t"]) if decrypt else row["t"]
 
     def _gc_history(self, path: str, *metas: dict) -> None:
         """Remove superseded history version files — everything under
@@ -488,9 +523,12 @@ class Database:
             for hist_meta in metas
             for items in hist_meta.values()
             for item in items
+            if "file" in item
         }
         try:
             for entry in self.history._undo + self.history._redo:
+                if entry[1] is None:
+                    continue  # a cell entry reads no file
                 for f in entry[1].inputFiles():
                     # file URIs percent-encode specials; unquote before
                     # comparing against the os.path-built keep entries
@@ -618,6 +656,11 @@ class Database:
                     gathered.append((seq, cube, item))
             gathered.sort(key=lambda t: t[0])
             for _seq, cube, item in gathered:
+                if "file" not in item:  # a cell entry: its images
+                    stack.append((cube, None, {
+                        tuple(addr): v for addr, v in item["cells"]
+                    }))
+                    continue
                 vdf = db.spark.read.parquet(os.path.join(path, item["file"]))
                 vdf = db._dec_fact(cube, vdf, db._open_key)
                 pending = {
@@ -625,6 +668,10 @@ class Database:
                 }
                 stack.append((cube, vdf, pending))
 
+        db._crypt_images(
+            (meta.get("history", {}), meta.get("history_redo", {})),
+            db._open_key, decrypt=True,
+        )
         _restore("history", db.history._undo)
         _restore("history_redo", db.history._redo)
         db._storage_path = path
@@ -660,6 +707,7 @@ class Database:
     def close(self) -> None:
         for cube in self.cubes.values():
             try:
-                cube._fact.unpersist()
+                if cube._built_fact is not None:
+                    cube._built_fact.unpersist()
             except Exception:
                 pass

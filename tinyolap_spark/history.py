@@ -1,31 +1,33 @@
 """Undo/redo history over cube mutations (reference ``history.py:298-417``,
 ``commands.py`` — SURVEY §2.1 S7).
 
-The reference logs one Command per cell write (value_before/value_after,
-``history.py:329-343``) and undoes them by re-applying inverse writes.
-Spark-native版: DataFrames are IMMUTABLE, so a "version" is just a
-reference to the cube's fact DataFrame at capture time — capturing a
-version is O(1), no copy, no diff.  Each logical mutation (one ``set``,
-one ``write_rows``, one bulk load, one area op) pushes
-``(cube, fact_ref, pending_copy)`` onto the undo stack; undo swaps the
-references back, redo swaps forward.  Granularity therefore matches the
-reference: ``cube.set(...)`` is one undoable step.
+Each logical mutation (one ``set``, one ``write_rows``, one bulk load, one
+area op) pushes one ``(cube, fact, cells)`` entry onto the undo stack, so
+granularity matches the reference: ``cube.set(...)`` is one undoable step.
+An entry is one of two kinds:
 
-Session-scoped (reference ``HistoryMode.SESSION``); the PERSIST mode's
-at-scale analogue is table-format time travel (e.g. Delta), per
-ARCHITECTURE.md §5 — a history survives a restart as retained table
-versions, not a command log.
+- **Cell entry** (``fact is None``): a cell write on a cube whose driver
+  copy is the store of record (``tinyolap_spark/local.py``).  ``cells``
+  maps each written base address to the value it held before — the
+  reference's command log of before-images (``history.py:329-343``).
+  Undo writes the images back as cell writes and keeps the current values
+  as the redo entry's images, so an entry costs its cells, not a fact.
+- **Snapshot entry**: whole-fact ops (loads, area ops, ``clear``) and
+  writes on a cube whose Spark fact is the record.  DataFrames are
+  IMMUTABLE, so ``fact`` is just a reference to the fact DataFrame at
+  capture time (O(1), no copy) and ``cells`` the pending writes then;
+  undo swaps the references back, redo swaps forward.  Cubes consult
+  :meth:`History.holds` before unpersisting a replaced fact, and evicted
+  entries release theirs through :meth:`History._release`.
 
-Cache management: ``Cube._replace_fact`` normally unpersists the fact it
-replaces; while history is enabled that would tear down cached/checkpoint
-blocks still referenced by undo entries, so cubes consult
-:meth:`History.holds` before unpersisting and evicted entries release
-their facts through :meth:`History._release`.
+Session-scoped (reference ``HistoryMode.SESSION``); ``Database.save``
+persists the most recent entries per cube — cell entries as JSON images
+next to the cube metadata, snapshot entries as fact-version parquet files.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Any, Optional
+from typing import TYPE_CHECKING, Any, Optional, Sequence
 
 if TYPE_CHECKING:  # pragma: no cover
     from .cube import Cube
@@ -41,11 +43,21 @@ class History:
         self._redo: list[tuple["Cube", Any, dict]] = []
 
     # ------------------------------------------------------------- capture
-    def capture(self, cube: "Cube") -> None:
-        """Record the cube's state BEFORE a mutation (one undo step)."""
+    def capture(
+        self,
+        cube: "Cube",
+        cells: "Optional[Sequence[tuple[int, ...]]]" = None,
+    ) -> None:
+        """Record the cube's state BEFORE a mutation (one undo step).
+        ``cells``: the base addresses a cell write is about to write; the
+        entry is then a cell entry when the cube's copy is the store of
+        record, else (and for whole-fact ops) a snapshot entry."""
         if not self.enabled:
             return
-        self._undo.append((cube, cube._fact, dict(cube._pending)))
+        if cells is not None and cube._local is not None:
+            self._undo.append((cube, None, cube._stored(cells)))
+        else:
+            self._undo.append((cube, cube._fact, dict(cube._pending)))
         for entry in self._redo:
             self._release(entry)
         self._redo.clear()
@@ -55,26 +67,26 @@ class History:
     # ------------------------------------------------------------ undo/redo
     def undo(self, count: int = 1) -> int:
         """Revert up to ``count`` mutations; returns how many reverted."""
-        done = 0
-        for _ in range(count):
-            if not self._undo:
-                break
-            cube, fact, pending = self._undo.pop()
-            self._redo.append((cube, cube._fact, dict(cube._pending)))
-            cube._pending = pending
-            cube._replace_fact(fact, persist=False)
-            done += 1
-        return done
+        return self._replay(self._undo, self._redo, count)
 
     def redo(self, count: int = 1) -> int:
+        return self._replay(self._redo, self._undo, count)
+
+    @staticmethod
+    def _replay(src: list, dst: list, count: int) -> int:
+        """Apply up to ``count`` entries popped from ``src``, pushing onto
+        ``dst`` the entry that reverts each."""
         done = 0
-        for _ in range(count):
-            if not self._redo:
-                break
-            cube, fact, pending = self._redo.pop()
-            self._undo.append((cube, cube._fact, dict(cube._pending)))
-            cube._pending = pending
-            cube._replace_fact(fact, persist=False)
+        while done < count and src:
+            cube, fact, cells = src.pop()
+            if fact is None:
+                dst.append((cube, None, cube._stored(cells)))
+                cube._pending.update(cells)
+                cube._invalidate()
+            else:
+                dst.append((cube, cube._fact, dict(cube._pending)))
+                cube._pending = dict(cells)
+                cube._replace_fact(fact, persist=False)
             done += 1
         return done
 
@@ -107,8 +119,8 @@ class History:
         )
 
     def _release(self, entry: tuple) -> None:
-        cube, fact, _pending = entry
-        if fact is cube._fact or self.holds(fact):
+        cube, fact, _cells = entry
+        if fact is None or fact is cube._built_fact or self.holds(fact):
             return
         try:
             fact.unpersist()

@@ -22,12 +22,15 @@ Aggregates roll up with per-dimension closure weights taken from
 fact row under it is ``None``; one whose rows hold no number (string cells
 only) is ``0.0``.
 
-A copy mirrors exactly one fact DataFrame object (``fact``).  The cube
-swaps its fact on every write; cell writes hand their rows to
+Once built, the copy is the cube's store of record.  Cell writes
+(``Cube._flush``, ``Cube.write_rows``) hand their rows to
 :meth:`LocalFact.patched`, which returns a NEW copy (copy-on-write, one
-O(cells) memcpy) for the new fact object, so a reader holding the old copy
-never sees half a write.  Any other swap leaves the copy behind, and the
-next read rebuilds it.
+O(cells) memcpy, no Spark job), so a reader holding the old copy never
+sees half a write.  The Spark fact is then derived state: ``fact`` is the
+DataFrame the copy was collected from, or ``None`` on a patched copy until
+a Spark consumer asks and :meth:`LocalFact.frame` builds it (one Arrow
+``createDataFrame``, no Spark job).  Any other fact swap (loads, area
+ops, ``clear``) drops the copy, and the next read rebuilds it.
 """
 
 from __future__ import annotations
@@ -94,6 +97,18 @@ class _Closure:
         return m[keep][order], s[keep][order], w[keep][order]
 
 
+def _strides(radix: Sequence[int]) -> "Optional[np.ndarray]":
+    """Mixed-radix strides of ``radix`` (last dimension fastest), or
+    ``None`` when the id space does not fit a 62-bit address code."""
+    strides, span = [], 1
+    for r in reversed(radix):
+        strides.append(span)
+        span *= int(r)
+    if span >= _MAX_CODE:
+        return None
+    return np.asarray(strides[::-1], dtype=np.int64)
+
+
 def _fan_out(
     col: np.ndarray,
     pairs: "tuple[np.ndarray, np.ndarray, np.ndarray]",
@@ -123,8 +138,9 @@ def _fan_out(
 
 class LocalFact:
     """See module docstring.  The arrays are never written after a build
-    or patch; ``closures`` caches :class:`_Closure` tables by dimension
-    version and is shared with the patched copies."""
+    or patch; ``fact`` is set at most once on a patched copy, when the
+    cube derives it; ``closures`` caches :class:`_Closure` tables by
+    dimension version and is shared with the patched copies."""
 
     __slots__ = (
         "fact", "radix", "strides", "codes", "ids", "values", "null", "strs",
@@ -160,16 +176,13 @@ class LocalFact:
                 return None
             top = int(col.max()) + 1 if len(col) else 0
             radix.append(max(1, d._next_idx, top))
-        strides, span = [], 1
-        for r in reversed(radix):
-            strides.append(span)
-            span *= r
-        if span >= _MAX_CODE:
+        strides = _strides(radix)
+        if strides is None:
             return None
         self = cls()
         self.fact = fact
         self.radix = np.asarray(radix, dtype=np.int64)
-        self.strides = np.asarray(strides[::-1], dtype=np.int64)
+        self.strides = strides
         id_arr = np.vstack(ids)
         codes = self._encode(id_arr.T)
         order = np.argsort(codes, kind="stable")
@@ -415,32 +428,51 @@ class LocalFact:
 
     # -------------------------------------------------------------- writes
     def patched(
-        self, fact: DataFrame, rows: "Sequence[tuple]"
+        self, rows: "Sequence[tuple]", dims: Sequence[Dimension]
     ) -> "Optional[LocalFact]":
-        """A new copy mirroring ``fact`` = this copy's fact with ``rows``
-        merged in the way ``Cube._flush`` / ``write_rows`` merge them:
-        every stored row at a written address is dropped, then each row
-        ``(*ids, value, value_str)`` with a value or a string is inserted.
-        ``None`` when a written id falls outside the copy's radix (a
-        member added since the build): the next read rebuilds."""
+        """A new copy: this one with ``rows`` merged in the way
+        ``Cube._merge`` merges them into a Spark fact — every stored row
+        at a written address is dropped, then each row ``(*ids, value,
+        value_str)`` with a value or a string is inserted.  Its ``fact``
+        is ``None`` (see the module docstring).  A written id at or above
+        the radix (a member added since the build) grows the radix to the
+        dimensions' id space and re-encodes the codes, whose order does
+        not change; ``None`` when the grown space no longer fits a 62-bit
+        address code."""
         new = LocalFact()
-        new.fact = fact
-        new.radix, new.strides, new.closures = (
-            self.radix, self.strides, self.closures
+        new.fact = None
+        new.closures = self.closures
+        new.radix, new.strides = self.radix, self.strides
+        new.codes, new.ids, new.values, new.null, new.strs = (
+            self.codes, self.ids, self.values, self.null, self.strs
         )
         if not rows:
-            new.codes, new.ids, new.values, new.null, new.strs = (
-                self.codes, self.ids, self.values, self.null, self.strs
-            )
             return new
         nd = len(self.radix)
-        wc, ok = self._codes_of([r[:nd] for r in rows])
-        if not ok.all():
-            return None
+        written = np.asarray(
+            [r[:nd] for r in rows], dtype=np.int64
+        ).reshape(len(rows), nd)
+        top = written.max(axis=0) + 1
+        if (top > self.radix).any():
+            radix = np.maximum(
+                np.maximum(self.radix, top), [d._next_idx for d in dims]
+            )
+            strides = _strides(radix.tolist())
+            if strides is None:
+                return None
+            new.radix, new.strides = radix, strides
+            new.codes = new._encode(self.ids.T)
+            if self.strs:
+                old = np.fromiter(self.strs, dtype=np.int64)
+                recoded = (
+                    (old[:, None] // self.strides) % self.radix
+                ) @ strides
+                new.strs = dict(zip(recoded.tolist(), self.strs.values()))
+        wc = new._encode(written)
         # drop every stored row at a written address
-        edge = np.zeros(len(self.codes) + 1, dtype=np.int64)
-        np.add.at(edge, np.searchsorted(self.codes, wc, "left"), 1)
-        np.add.at(edge, np.searchsorted(self.codes, wc, "right"), -1)
+        edge = np.zeros(len(new.codes) + 1, dtype=np.int64)
+        np.add.at(edge, np.searchsorted(new.codes, wc, "left"), 1)
+        np.add.at(edge, np.searchsorted(new.codes, wc, "right"), -1)
         keep = np.cumsum(edge[:-1]) == 0
         # insert, in code order, the rows that hold a value or a string
         ins = sorted(
@@ -449,7 +481,7 @@ class LocalFact:
             key=lambda j: wc[j],
         )
         ins_codes = wc[ins]
-        kept_codes = self.codes[keep]
+        kept_codes = new.codes[keep]
         at = np.searchsorted(kept_codes, ins_codes, "right")
         ins_ids = np.asarray(
             [rows[j][:nd] for j in ins], dtype=np.int32
@@ -463,10 +495,29 @@ class LocalFact:
         new.ids = np.insert(self.ids[:, keep], at, ins_ids, axis=1)
         new.values = np.insert(self.values[keep], at, ins_vals)
         new.null = np.insert(self.null[keep], at, ins_null)
-        written = set(wc.tolist())
-        strs = {c: s for c, s in self.strs.items() if c not in written}
+        gone = set(wc.tolist())
+        strs = {c: s for c, s in new.strs.items() if c not in gone}
         for j, c in zip(ins, ins_codes.tolist()):
             if rows[j][nd + 1] is not None:
                 strs[c] = rows[j][nd + 1]
         new.strs = strs
         return new
+
+    def frame(self, spark: Any, schema: Any) -> DataFrame:
+        """This copy as a Spark DataFrame of the fact ``schema`` (one id
+        column per dimension, ``value``, ``value_str``): one Arrow
+        ``createDataFrame`` of the arrays, which runs no Spark job."""
+        import pyarrow as pa
+
+        strs: list = [None] * len(self.codes)
+        if self.strs:
+            at = np.searchsorted(self.codes, np.fromiter(self.strs, np.int64))
+            for p, s in zip(at.tolist(), self.strs.values()):
+                strs[p] = s
+        cols = {
+            f.name: pa.array(self.ids[i])
+            for i, f in enumerate(schema.fields[: len(self.radix)])
+        }
+        cols["value"] = pa.array(self.values, mask=self.null)
+        cols["value_str"] = pa.array(strs, type=pa.string())
+        return spark.createDataFrame(pa.table(cols), schema=schema)
